@@ -32,8 +32,8 @@ sys.path.insert(0, REPO)
 def _base(spark, sf_dir):
     import pyspark.sql.functions as F
 
-    from pdf_extractor_spark.corpus import (PPB_DEDUP, QUANT_S,
-                                            _bands_array_s, _persist)
+    from pdf_extractor_spark.corpus import (PPB_DEDUP, QUANT_S, _persist,
+                                            _with_bands_nrm)
     from pdf_extractor_spark.queries import t
     e = t(spark, sf_dir, "embeddings")
     perturbed = F.expr(
@@ -47,11 +47,8 @@ def _base(spark, sf_dir):
             .select((F.col("vec_id") + 100000).alias("vec_id"),
                     perturbed.alias("qv")))
     )
-    b = (base.withColumn("bands", _bands_array_s("qv", PPB_DEDUP))
-         .withColumn("nrm", F.expr(
-             "aggregate(zip_with(qv, qv, (x, y) -> x * y), "
-             "0L, (acc, v) -> acc + v)")))
-    return _persist(b)
+    # sign-LSH bands + self-norm from the Arrow emb_bands_nrm_udf
+    return _persist(_with_bands_nrm(base, PPB_DEDUP))
 
 
 def _verify(b, cand):

@@ -139,8 +139,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--hamming-max", type=int, default=3,
                     help="simhash near-dup hamming threshold (default 3; "
                          "max 3 — the 4-band pigeonhole only guarantees a "
-                         "band collision for hamming <= bands-1, larger "
-                         "values would silently lose recall and raise)")
+                         "band collision for hamming <= bands-1, so larger "
+                         "values, which would silently lose recall, are "
+                         "rejected)")
     ap.add_argument("--dedup-semantic", default=None, metavar="PARQUET",
                     help="SemDeDup mode: input parquet of (vec_id, "
                          "embedding); corpus size is estimated from the "
@@ -159,14 +160,6 @@ def main(argv: list[str] | None = None) -> int:
                          "when no block is hot, but no task ever ingests a "
                          "whole pathological block (use when the corpus has "
                          "multi-million-row duplicate regions)")
-    ap.add_argument("--sql-sig", action="store_true",
-                    help="compute the --dedup-texts simhash / the "
-                         "--dedup-embeddings LSH bands + verify dots with "
-                         "the SQL expression forms instead of the Arrow-"
-                         "batched numpy default (bit-identical; the SQL "
-                         "HOF chains are CodegenFallback — interpreted "
-                         "row-at-a-time, ~10-40x slower per row — so this "
-                         "exists only to cross-check the two paths)")
     ap.add_argument("--cc-iterations", type=int, default=20,
                     help="max min-label propagation rounds for the dedup "
                          "component labeling; the run iterates to fixpoint "
@@ -201,6 +194,13 @@ def main(argv: list[str] | None = None) -> int:
     if not args.input and not (args.dedup_embeddings or args.dedup_texts
                                or args.dedup_semantic):
         ap.error("--input is required except in --grade mode")
+    from .corpus import SIMHASH_BANDS
+    if args.hamming_max > SIMHASH_BANDS - 1:
+        # the library raises the same limit; failing here skips the
+        # Spark session start
+        ap.error(f"--hamming-max {args.hamming_max} exceeds the "
+                 f"{SIMHASH_BANDS}-band pigeonhole recall guarantee "
+                 f"(max {SIMHASH_BANDS - 1})")
 
     from .session import get_spark
     spark = get_spark("pdf_extractor_spark.cli", master=args.master)
@@ -210,8 +210,7 @@ def main(argv: list[str] | None = None) -> int:
         metrics = dedup_embeddings_run(
             spark, args.dedup_embeddings, args.output,
             threshold_pct=args.threshold_pct,
-            iterations=args.cc_iterations, skew_safe=args.skew_safe,
-            arrow_sig=not args.sql_sig)
+            iterations=args.cc_iterations, skew_safe=args.skew_safe)
         print(json.dumps(metrics))
         return 0
 
@@ -220,8 +219,7 @@ def main(argv: list[str] | None = None) -> int:
         metrics = dedup_texts_run(spark, args.dedup_texts, args.output,
                                   hamming_max=args.hamming_max,
                                   iterations=args.cc_iterations,
-                                  skew_safe=args.skew_safe,
-                                  arrow_sig=not args.sql_sig)
+                                  skew_safe=args.skew_safe)
         print(json.dumps(metrics))
         return 0
 
@@ -232,8 +230,7 @@ def main(argv: list[str] | None = None) -> int:
             threshold_pct=args.threshold_pct,
             iterations=args.cc_iterations,
             target_cell_size=args.target_cell_size,
-            skew_safe=args.skew_safe,
-            arrow_sig=not args.sql_sig)
+            skew_safe=args.skew_safe)
         print(json.dumps(metrics))
         return 0
 

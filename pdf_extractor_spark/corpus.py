@@ -23,10 +23,13 @@ Scale design (the point is 100 TB, not 500 rows):
   exact, and ``sqrt``/division over exact ints is correctly-rounded IEEE
   double in both engines, so even cosine *values* hash-match.  Ratio
   thresholds are cross-multiplied integers.
-* **JVM-side only.** Every operator here is pure `pyspark.sql.functions`
-  / Spark-SQL higher-order functions — zero Python UDFs, whole-stage
-  codegen end-to-end.  The only pandas stage in the repo stays in the
-  extraction operator and the multimodal decode stub (Arrow-batched).
+* **One Spark engine per kernel.** Most operators are pure
+  `pyspark.sql.functions`.  The simhash bands, sign-LSH bands, verify
+  dots and k-means argmax run as Arrow-batched pandas UDFs
+  (``simhash_bands_udf``, ``emb_bands_nrm_udf``, ``emb_dot_udf``,
+  ``kmeans_assign_udf``): Spark's higher-order functions are
+  CodegenFallback, so the equivalent SQL folds run in the row-at-a-time
+  interpreter.  The DuckDB ``_D`` strings stay the independent oracle.
 
 Near-dup fixtures: the driver corpus has no natural duplicates, so dedup
 queries build a deterministic working set ``documents ∪ perturbed copies``
@@ -35,6 +38,8 @@ provably *finds* those engineered near-dups and the oracle agrees.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -352,45 +357,24 @@ def _simhash_expr_d(nbits: int = 16) -> str:
     return "CAST((" + " + ".join(terms) + ") AS BIGINT)"
 
 
-def _simhash_nib_expr_d(nbits: int = 60) -> str:
+def _simhash_nib_expr_d(nbits: int = 60, lo: int = 0) -> str:
     """DuckDB dialect of the WIDE simhash: bit j votes on bit (j mod 4) of
-    hex digit (j div 4), so one md5 yields up to 128 usable bits.  60 bits
-    keeps the signature strictly positive in a signed BIGINT so banding
-    div/mod arithmetic agrees between engines (no floor-vs-truncate
-    divergence on negatives)."""
+    hex digit (j div 4) of each word digest in `hs`, so one md5 yields up
+    to 128 usable bits.  Returns signature bits [lo, lo+nbits) as a
+    BIGINT — with ``lo = k·bits, nbits = bits`` that is band k of
+    `_simhash_bands_batch`.  60 bits keeps the registry signature
+    strictly positive in a signed BIGINT so its banding div/mod is exact
+    (no floor-vs-truncate divergence on negatives)."""
     terms = []
-    for j in range(nbits):
+    for j in range(lo, lo + nbits):
         digit = f"substr(h, {j // 4 + 1}, 1)"
         nib = f"(strpos('0123456789abcdef', {digit}) - 1)"
         vote = (f"CAST(list_sum(list_transform(hs, h -> "
                 f"CASE WHEN ({nib} // {1 << (j % 4)}) % 2 = 1 THEN 1 ELSE -1 END)) "
                 "AS INT)")
-        terms.append(f"(CASE WHEN {vote} > 0 THEN CAST({1 << j} AS BIGINT) "
-                     f"ELSE 0 END)")
+        terms.append(f"(CASE WHEN {vote} > 0 "
+                     f"THEN CAST({1 << (j - lo)} AS BIGINT) ELSE 0 END)")
     return "CAST((" + " + ".join(terms) + ") AS BIGINT)"
-
-
-def _simhash_nib_from_text_s(nbits: int = 60) -> str:
-    """Spark dialect of the wide simhash, single aggregate pass (see
-    _simhash_from_text_s for why one pass matters).  Per word hash the
-    ceil(nbits/4) hex nibbles are decoded ONCE (let-bound), then the
-    nbits per-bit votes are cheap shifts — instr/substr per BIT would
-    quadruple the string work in the inner loop."""
-    ndigits = (nbits + 3) // 4
-    nibs = (f"transform(sequence(1, {ndigits}), d -> "
-            "instr('0123456789abcdef', substr(h, d, 1)) - 1)")
-    bitvotes = (f"transform(sequence(1, {nbits}), j -> "
-                "CASE WHEN shiftright(nb[(j - 1) div 4], (j - 1) % 4) % 2 = 1 "
-                "THEN 1 ELSE -1 END)")
-    votes = (f"aggregate(hs, transform(sequence(1, {nbits}), j -> 0), "
-             f"(acc, h) -> zip_with(acc, {let1(nibs, 'nb', bitvotes)}, "
-             "(x, y) -> x + y))")
-    bits = (f"cast(aggregate(sequence(0, {nbits - 1}), cast(0 as bigint), "
-            "(a, j) -> a + (CASE WHEN vt[j] > 0 "
-            "THEN shiftleft(cast(1 as bigint), j) ELSE cast(0 as bigint) END)) "
-            "as bigint)")
-    return let1(f"transform({WORDS_S}, w -> md5(w))", "hs",
-                let1(votes, "vt", bits))
 
 
 # Pigeonhole band count of the production simhash signature: <= 3 flipped
@@ -399,60 +383,30 @@ def _simhash_nib_from_text_s(nbits: int = 60) -> str:
 SIMHASH_BANDS = 4
 
 
-def _simhash_bands_from_text_s(bits: int) -> str:
-    """The PRODUCTION simhash banding: an array of 4 pigeonhole bands of
-    ``bits`` bits each over a 4·bits-wide signature, in one aggregate
-    pass.  Band k holds signature bits [k·bits, (k+1)·bits) under the
-    same vote rule as `_simhash_nib_from_text_s` (bit j votes on bit j%4
-    of word-digest hex digit j//4), so at bits=15 the 4 values equal the
-    60-bit registry signature's band split exactly (pinned by a pytest).
+def _simhash_bands_batch(texts, bits: int):
+    """The PRODUCTION simhash banding over a batch of texts: 4 pigeonhole
+    bands of ``bits`` bits each over a 4·bits-wide signature.  Signature
+    bit j votes on bit j%4 of word-digest hex digit j//4 (the rule of the
+    DuckDB `_simhash_nib_expr_d`), and band k holds signature bits
+    [k·bits, (k+1)·bits), so at bits=15 the 4 values equal the 60-bit
+    registry signature's band split exactly (pinned by a pytest).
 
     Because the bands PARTITION the signature, total hamming = the sum
     of per-band hammings, and the pigeonhole guarantee (<= 3 flipped
-    bits -> >= 1 band untouched) holds at ANY band width — this is the
-    seam `simhash_band_bits(n)` threads through: wider bands = more
-    band space as the corpus grows.  Needs bits hex digits per word
-    digest; beyond md5's 32 the digest doubles (md5(w) ++ md5('#'+w),
-    the minhash module's trick), supporting bits <= 63 (bigint band),
-    i.e. corpora to ~10^18 docs."""
-    if not 1 <= bits <= 63:
-        raise ValueError(f"band width {bits} outside [1, 63]")
-    nbits = 4 * bits
-    src = ("md5(w)" if bits <= 32
-           else "concat(md5(w), md5(concat('#', w)))")
-    nibs = (f"transform(sequence(1, {bits}), d -> "
-            "instr('0123456789abcdef', substr(h, d, 1)) - 1)")
-    bitvotes = (f"transform(sequence(1, {nbits}), j -> "
-                "CASE WHEN shiftright(nb[(j - 1) div 4], (j - 1) % 4) % 2 = 1 "
-                "THEN 1 ELSE -1 END)")
-    votes = (f"aggregate(hs, transform(sequence(1, {nbits}), j -> 0), "
-             f"(acc, h) -> zip_with(acc, {let1(nibs, 'nb', bitvotes)}, "
-             "(x, y) -> x + y))")
-    band = (f"transform(sequence(0, 3), k -> "
-            f"cast(aggregate(sequence(k * {bits}, k * {bits} + {bits - 1}), "
-            "cast(0 as bigint), (a, j) -> a + (CASE WHEN vt[j] > 0 "
-            f"THEN shiftleft(cast(1 as bigint), j - k * {bits}) "
-            "ELSE cast(0 as bigint) END)) as bigint))")
-    return let1(f"transform({WORDS_S}, w -> {src})", "hs",
-                let1(votes, "vt", band))
+    bits -> >= 1 band untouched) holds at ANY band width — the seam
+    `simhash_band_bits(n)` threads through.  Needs ``bits`` hex digits
+    per word digest; beyond md5's 32 the digest doubles (md5(w) ++
+    md5('#'+w), the minhash module's trick), supporting bits <= 63
+    (bigint band).
 
-
-def _simhash_bands_batch(texts, bits: int):
-    """Arrow-batch numpy replica of `_simhash_bands_from_text_s` —
-    bit-identical by construction (hypothesis-fuzzed and Spark-level
-    parity-tested in tests/test_sig_parity.py), ~10-40x faster per row.
-
-    Why a Python path beats the built-in expression HERE: every
-    higher-order function (transform/aggregate/zip_with) is
-    CodegenFallback in Spark — the per-word/per-bit vote fold runs in
-    Catalyst's row-at-a-time INTERPRETER, never whole-stage codegen
-    (verified by thread-dumping a 2.4M-row production run: all 32
-    executor threads inside ArrayTransform.eval/ZipWith.eval, ~19
-    core-ms/row).  The rewrite keeps md5 in C (hashlib) and folds the
-    votes as three numpy ops over ALL words of the batch at once
-    (nibble split -> ±1 vote matrix -> per-doc reduceat), so the hot
-    loop is one md5 call per word — the "UDFs are the slow path" rule
-    inverts when the built-in path is an interpreted HOF chain.
+    Why numpy and not a built-in expression: every higher-order function
+    (transform/aggregate/zip_with) is CodegenFallback in Spark, so a SQL
+    vote fold runs in Catalyst's row-at-a-time INTERPRETER (a thread dump
+    of a 2.4M-row run had all 32 executor threads inside
+    ArrayTransform.eval/ZipWith.eval, ~19 core-ms/row).  Here md5 stays
+    in C (hashlib) and the votes fold as three numpy ops over ALL words
+    of the batch at once (nibble split -> ±1 vote matrix -> per-doc
+    reduceat), so the hot loop is one md5 call per word.
 
     Returns a list aligned to ``texts``: array of 4 int64 band values,
     or None for word-less docs (callers filter those out beforehand)."""
@@ -482,8 +436,8 @@ def _simhash_bands_batch(texts, bits: int):
     nib[:, 0::2] = raw >> 4
     nib[:, 1::2] = raw & 15
     nib = nib[:, :bits]
-    # vote matrix index i = 4*d + r <=> bit r of hex digit d — the same
-    # flat order the SQL form's sequence(1, 4*bits) lambda walks
+    # vote matrix index i = 4*d + r <=> bit r of hex digit d = signature
+    # bit i
     bv = (nib[:, :, None] >> np.arange(4, dtype=np.uint8)) & 1
     pm = bv.reshape(bv.shape[0], 4 * bits).astype(np.int32) * 2 - 1
     nw = np.asarray(counts, dtype=np.int64)
@@ -502,11 +456,13 @@ def _simhash_bands_batch(texts, bits: int):
 
 def simhash_bands_udf(bits: int):
     """`_simhash_bands_batch` as an Arrow-batched pandas UDF column —
-    the production signature path (`dedup_texts_run`).  The SQL
-    expression form stays as the registry/oracle reference and the
-    parity gate."""
+    the simhash signature of `dedup_simhash_blocked` and
+    `dedup_texts_run`."""
     import pandas as pd
     from pyspark.sql.types import ArrayType, LongType
+
+    if not 1 <= bits <= 63:
+        raise ValueError(f"band width {bits} outside [1, 63]")
 
     # no type hints: `from __future__ import annotations` stringifies
     # them and the lazy pandas import is not resolvable at decoration
@@ -600,9 +556,9 @@ def dedup_simhash(spark, sf_dir):
     """,
     doc="SimHash near-dup at scale (the production pairing dedup_simhash's "
         "engineered-id join avoids): pigeonhole banding — a 60-bit "
-        "signature (bit j votes on bit j%%4 of md5 hex digit j//4; 60 not "
-        "64 keeps the signed-BIGINT band arithmetic positive, so both "
-        "engines' div/mod agree) split into 4 disjoint 15-bit bands; any "
+        "signature (bit j votes on bit j%%4 of md5 hex digit j//4) as 4 "
+        "disjoint 15-bit bands (the Arrow simhash_bands_udf; the oracle "
+        "splits a 60-bit BIGINT, positive so its div/mod is exact); any "
         "pair within hamming distance 3 must agree exactly on >= 1 band, "
         "so candidates come from an equi-join on (band_idx, band_bits) — "
         "never all-pairs — and exact bit_count verifies <= 3 inside "
@@ -614,30 +570,36 @@ def dedup_simhash(spark, sf_dir):
 )
 def dedup_simhash_blocked(spark, sf_dir):
     corpus = _neardup_corpus_s(spark, sf_dir)
-    sigs = (
-        corpus.filter(F.expr(f"size({WORDS_S}) >= 1"))
-        .select("doc_id", F.expr(_simhash_nib_from_text_s(60)).alias("simhash"))
-    )
+    sigs = (corpus.filter(F.expr(f"size({WORDS_S}) >= 1"))
+            .select("doc_id", simhash_bands_udf(15)(F.col("text")).alias("bands")))
     sigs = _persist(sigs)   # referenced 3x: band explode + both verify legs
-    ex = (sigs.select("doc_id", "simhash",
-                      F.explode(F.expr("sequence(1, 4)")).alias("band_idx"))
-          .withColumn("band_bits", F.expr(
-              "(simhash div CASE band_idx WHEN 1 THEN 1 WHEN 2 THEN 32768 "
-              "WHEN 3 THEN 1073741824 ELSE 35184372088832 END) % 32768")))
+    ex = sigs.select(
+        "doc_id", F.posexplode("bands").alias("band_idx", "band_bits"))
+    return _simhash_band_pairs(sigs, ex, 3)
+
+
+def _simhash_band_pairs(sigs, ex, hamming_max: int):
+    """(doc_a, doc_b, hamming) pairs within ``hamming_max`` over banded
+    signatures ``sigs`` = (doc_id, bands): candidates from the equi-join
+    of the exploded band rows ``ex`` = (doc_id, band_idx, band_bits),
+    verified by the exact hamming over the full signature (the sum of
+    per-band xor popcounts — bands partition the signature)."""
     a, b = ex.alias("a"), ex.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
-               & (F.col("a.band_bits") == F.col("b.band_bits"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"))
-    ham = F.expr("bit_count(sim_a ^ sim_b)").cast("int")
+    cand = (a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
+                   & (F.col("a.band_bits") == F.col("b.band_bits"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"))
+            .distinct())
+    sa = sigs.select(F.col("doc_id").alias("doc_a"),
+                     F.col("bands").alias("bands_a"))
+    sb = sigs.select(F.col("doc_id").alias("doc_b"),
+                     F.col("bands").alias("bands_b"))
+    ham = F.expr("aggregate(zip_with(bands_a, bands_b, "
+                 "(x, y) -> bit_count(x ^ y)), 0, (acc, v) -> acc + v)")
     return (cand.join(sa, "doc_a").join(sb, "doc_b")
-            .select("doc_a", "doc_b", ham.alias("hamming"))
-            .filter(F.col("hamming") <= 3))
+            .select("doc_a", "doc_b", ham.cast("int").alias("hamming"))
+            .filter(F.col("hamming") <= hamming_max))
 
 
 # ---------------------------------------------------------------------------
@@ -1118,9 +1080,9 @@ def ann_topk_cosine(spark, sf_dir):
             .select("query_id", "rank", "vec_id", "cos_sim"))
 
 
-# Deterministic ±1 hyperplanes for sign-LSH, as an md5-seeded literal sign
-# matrix inlined into both dialects (the old arithmetic family
-# (j*(h+2))%5 only had 5 distinct planes — useless past 4 planes).  Plane
+# Deterministic ±1 hyperplanes for sign-LSH, as an md5-seeded sign matrix
+# (numpy in `emb_bands_nrm_udf`, SQL literals in the DuckDB oracle; the old
+# arithmetic family (j*(h+2))%5 only had 5 distinct planes).  Plane
 # count is a PARAMETER: buckets must grow with corpus size (16 fixed
 # buckets => n²/16 intra-bucket pairs — quadratic at 10^9 vectors).  The
 # banded OR-construction (N_EMB_BANDS bands of PPB planes) keeps recall:
@@ -1281,34 +1243,25 @@ def _plane_signs(h: int) -> list[int]:
     return out
 
 
-def _plane_dot(vec: str, h: int, dialect: str) -> str:
-    """Signed dot against a literal sign vector (exact int64 sum both
-    engines).  The signs ride as a small array literal + zip_with/
-    list_transform — NOT a 64-term ±element chain, which balloons the
-    expression tree past what Catalyst will codegen (measured 6x slower)."""
+def _plane_dot_d(vec: str, h: int) -> str:
+    """DuckDB signed dot against a literal sign vector (exact int64 sum).
+    The signs ride as a small array literal + list_transform — NOT a
+    64-term ±element chain, which balloons the expression tree."""
     signs = ", ".join(str(s) for s in _plane_signs(h))
-    if dialect == "spark":
-        return (f"aggregate(zip_with({vec}, array({signs}), "
-                f"(x, s) -> x * CAST(s AS BIGINT)), 0L, (acc, v) -> acc + v)")
     return (f"CAST(list_sum(list_transform(range(1, {EMB_DIM + 1}), "
             f"i -> {vec}[i] * ([{signs}])[i])) AS BIGINT)")
 
 
-def _band_bucket(vec: str, dialect: str, band: int, ppb: int) -> str:
+def _band_bucket_d(vec: str, band: int, ppb: int) -> str:
     """Bucket id of `band`: ppb sign bits of planes [band*ppb, band*ppb+ppb)."""
-    bits = [f"(CASE WHEN {_plane_dot(vec, band * ppb + i, dialect)} > 0 "
+    bits = [f"(CASE WHEN {_plane_dot_d(vec, band * ppb + i)} > 0 "
             f"THEN {1 << i} ELSE 0 END)" for i in range(ppb)]
     return "CAST((" + " + ".join(bits) + ") AS INT)"
 
 
-def _bands_array_s(vec: str, ppb: int):
-    return F.array(*[F.expr(_band_bucket(vec, "spark", k, ppb))
-                     for k in range(N_EMB_BANDS)])
-
-
 def _sign_matrix(ppb: int):
     """(EMB_DIM, N_EMB_BANDS*ppb) ±1 plane matrix, column h = plane h —
-    the same md5-seeded planes `_plane_dot` inlines as SQL literals."""
+    the same md5-seeded planes `_plane_dot_d` inlines as SQL literals."""
     import numpy as np
     return np.asarray([_plane_signs(h) for h in range(N_EMB_BANDS * ppb)],
                       dtype=np.int64).T
@@ -1316,16 +1269,16 @@ def _sign_matrix(ppb: int):
 
 def emb_bands_nrm_udf(ppb: int):
     """Sign-LSH band buckets + int64 self-norm in ONE Arrow pass over the
-    quantized vectors — the production banding path
-    (`dedup_embeddings_run`).  Bit-identical to `_bands_array_s` +- the
-    SQL norm fold BY CONSTRUCTION: the plane dots and the self-dot are
-    integer-valued and < 2^53, so every float64 summation order (numpy
-    matmul included) yields the exact same value as the sequential SQL
-    aggregate — no rounding-order hazard (parity-tested in
-    tests/test_sig_parity.py).  Why not the built-in expressions: each
-    plane dot is an aggregate(zip_with(...)) — CodegenFallback, Catalyst
-    interprets 4*ppb*EMB_DIM ops per row (see _simhash_bands_batch);
-    here it is one (batch x 64) @ (64 x 4*ppb) int64 matmul."""
+    quantized vectors — the banding of `ann_lsh_bucketed`,
+    `dedup_embedding_cosine` and `dedup_embeddings_run`.  Equal to the
+    DuckDB `_bands_array_d` + `NORM_D` BY CONSTRUCTION: the plane dots
+    and the self-dot are integer-valued and < 2^53, so every summation
+    order yields the same exact value (parity-tested in
+    tests/test_sig_parity.py).  Why not a built-in expression: each plane
+    dot would be an aggregate(zip_with(...)) — CodegenFallback, so
+    Catalyst interprets 4*ppb*EMB_DIM ops per row (see
+    _simhash_bands_batch); here it is one (batch x 64) @ (64 x 4*ppb)
+    int64 matmul."""
     import pandas as pd
     from pyspark.sql.types import (ArrayType, IntegerType, LongType,
                                    StructField, StructType)
@@ -1352,9 +1305,9 @@ def emb_bands_nrm_udf(ppb: int):
 
 def emb_dot_udf():
     """Exact candidate-verify dot as an Arrow-batched projection — the
-    per-candidate `DOT_S` fold is the hot interpreted expression of the
-    embedding dedup verify (candidates ~ 100x rows at the derived
-    occupancy).  int64 in, int64 out, exact — drop-in for F.expr(DOT_S)."""
+    per-candidate dot is the hot expression of the embedding dedup
+    verify (candidates ~ 100x rows at the derived occupancy), and the
+    `DOT_S` fold would run interpreted.  int64 in, int64 out, exact."""
     import pandas as pd
     from pyspark.sql.types import LongType
 
@@ -1368,8 +1321,28 @@ def emb_dot_udf():
 
 
 def _bands_array_d(vec: str, ppb: int) -> str:
-    return "[" + ", ".join(_band_bucket(vec, "duck", k, ppb)
+    return "[" + ", ".join(_band_bucket_d(vec, k, ppb)
                            for k in range(N_EMB_BANDS)) + "]"
+
+
+def _with_bands_nrm(q, ppb: int):
+    """Rows ``q`` (with a quantized `qv`) plus their sign-LSH `bands` and
+    self-norm `nrm`, both from one `emb_bands_nrm_udf` pass."""
+    bn = emb_bands_nrm_udf(ppb)(F.col("qv"))
+    return q.select("*", bn.getField("bands").alias("bands"),
+                    bn.getField("nrm").alias("nrm"))
+
+
+def _scored_pairs(cand, b):
+    """Candidate pairs ``cand`` = (vec_a, vec_b) with the exact quantized
+    `cos_sim` over rows ``b`` = (vec_id, qv, nrm)."""
+    va = b.select(F.col("vec_id").alias("vec_a"), F.col("qv").alias("qa"),
+                  F.col("nrm").alias("na"))
+    vb = b.select(F.col("vec_id").alias("vec_b"), F.col("qv").alias("qb"),
+                  F.col("nrm").alias("nb"))
+    return (cand.join(va, "vec_a").join(vb, "vec_b")
+            .withColumn("dot", emb_dot_udf()(F.col("qa"), F.col("qb")))
+            .withColumn("cos_sim", F.expr(COS)))
 
 
 @register(
@@ -1411,10 +1384,8 @@ def _bands_array_d(vec: str, ppb: int) -> str:
 def ann_lsh_bucketed(spark, sf_dir):
     e = (t(spark, sf_dir, "embeddings")
          .select("vec_id", F.expr(QUANT_S).alias("qv")))
-    b = (e.withColumn("bands", _bands_array_s("qv", PPB_ANN))
-         .withColumn("nrm", F.expr(
-             "aggregate(zip_with(qv, qv, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")))
-    b = _persist(b)   # referenced 4x (qx/cx band explodes + q/c vector legs)
+    # referenced 4x (qx/cx band explodes + q/c vector legs)
+    b = _persist(_with_bands_nrm(e, PPB_ANN))
     qx = (b.filter(F.col("vec_id") < 3)
           .select(F.col("vec_id").alias("query_id"),
                   F.posexplode("bands").alias("band_idx", "bucket")))
@@ -1429,7 +1400,7 @@ def ann_lsh_bucketed(spark, sf_dir):
          .select("vec_id", F.col("qv").alias("qb"), F.col("nrm").alias("nb")))
     scored = (
         cand.join(F.broadcast(q), "query_id").join(c, "vec_id")
-        .withColumn("dot", F.expr(DOT_S))
+        .withColumn("dot", emb_dot_udf()(F.col("qa"), F.col("qb")))
         .withColumn("cos_sim", F.expr(COS))
         .select("query_id", "vec_id", "cos_sim")
     )
@@ -1549,63 +1520,18 @@ def _kmeans_sql_assign(it: int) -> str:
 
 def _kmeans_sql_iter(it: int) -> str:
     """One unrolled Lloyd iteration in DuckDB SQL: assign to the nearest
-    centroid (cosine, cell tie-break), then recompute per-cell means."""
+    centroid (cosine, cell tie-break), then recompute per-cell centroids
+    as the FLOORED mean of the quantized vectors (integer-valued, so
+    every centroid dot is exact — see kmeans_assign_udf)."""
     return f"""{_kmeans_sql_assign(it)},
     dims{it} AS (
-      SELECT a.cell, u.i AS dim, AVG(d.qv[u.i]) AS cval
+      SELECT a.cell, u.i AS dim, CAST(floor(AVG(d.qv[u.i])) AS DOUBLE) AS cval
       FROM assign{it} a JOIN data d ON d.vec_id = a.vec_id,
            unnest(range(1, 65)) AS u(i)
       GROUP BY a.cell, u.i),
     cent{it + 1} AS (
       SELECT cell, array_agg(cval ORDER BY dim) AS cv
       FROM dims{it} GROUP BY cell)"""
-
-
-def _assign_nearest(data, cents_df, materialize: bool = True,
-                    carry_vec: bool = False):
-    """Nearest-centroid assignment of every ``data`` vector (vec_id, qv)
-    to a broadcast centroid set (cell, cv), cosine with cell tie-break.
-
-    Per-vector argmax as a MAP-SIDE-COMBINABLE aggregate: max_by over
-    the ordering struct (ccos desc, cell asc via negation) collapses
-    the n·K scored rows to n rows inside each scan task, so only n
-    (vec_id, cell) rows ever cross the exchange — the r2 form sorted
-    all n·K rows through a row_number window partitioned by vec_id,
-    8x the necessary shuffle volume, three times per query.  The
-    ordering struct is unique per (vec, cell), so the argmax is
-    deterministic and identical to the window form.  TRAINING-round
-    assignments feed the next round's centroids, whose lineage would
-    otherwise re-run every earlier crossJoin per reference — those are
-    materialized (``materialize=True``).  A FINAL assignment feeding one
-    downstream consumer needs no barrier: pass ``materialize=False`` and
-    it evaluates lazily inside the consumer's own job (VERDICT r3 item
-    5 — one materialization barrier removed from ann_ivf_kmeans and
-    dedup_semantic each).  ``carry_vec=True`` additionally returns the
-    vector itself (``first(qv)`` — constant within the vec_id group, so
-    deterministic): every consumer of an assignment immediately re-joins
-    ``data`` on vec_id to recover qv, which costs two more exchanges
-    (both join sides) per round; carrying qv through the SAME aggregation
-    exchanges n (vec_id, cell, qv) rows ONCE instead — strictly less
-    volume than the small-assignment exchange plus the join's two."""
-    aggs = [F.max_by(
-        "cell", F.struct(F.col("ccos").alias("c"),
-                         (-F.col("cell")).alias("nc"))).alias("cell")]
-    if carry_vec:
-        aggs.append(F.first("qv").alias("qv"))
-    step = (data.crossJoin(F.broadcast(cents_df))
-            .withColumn("ccos", F.expr(f"{_CDOT_S} / {_CNRM_S}"))
-            .groupBy("vec_id")
-            .agg(*aggs))
-    if not materialize:
-        return step
-    return _materialize(_persist(step, fresh=False))
-
-
-# Above this K, the literal-centroid assignment's plan (K x 64 literal
-# doubles + K HOF evaluations per row) stops being worth building; the
-# broadcast-crossJoin _assign_nearest takes over.  Well under the
-# KMEANS_K_MAX broadcast ceiling by design.
-LIT_CENTS_MAX = 256
 
 
 def _cents_rows(cents_df) -> list:
@@ -1618,62 +1544,22 @@ def _cents_rows(cents_df) -> list:
                   for r in cents_df.collect())
 
 
-def _assign_cell_lit(rows):
-    """Nearest-centroid cell as ONE PROJECTION over a literal centroid
-    array — zero shuffle (VERDICT r4 item 6).
-
-    The crossJoin+max_by form re-shuffles n (vec_id, cell, qv) rows by
-    vec_id every Lloyd round; with the centroids collected driver-side
-    (bounded, see ``_cents_rows``) the argmax folds entirely inside the
-    scan task: transform the literal array to (ccos, -cell, cell)
-    structs, array_max picks (ccos desc, cell asc) — the identical
-    ordering struct ``_assign_nearest`` maximizes, with the identical
-    left-to-right double fold as ``_CDOT_S``/``_CNRM_S``, so assignments
-    are bit-identical to the crossJoin form and the DuckDB oracle."""
-    arr = F.array(*[
-        F.struct(F.lit(c).cast("long").alias("cell"),
-                 F.array(*[F.lit(v) for v in cv]).alias("cv"))
-        for c, cv in rows])
-
-    def ccos(c):
-        dot = F.aggregate(
-            F.zip_with(F.col("qv"), c.getField("cv"),
-                       lambda x, y: x.cast("double") * y),
-            F.lit(0.0), lambda acc, v: acc + v)
-        nrm = F.sqrt(F.aggregate(
-            F.zip_with(c.getField("cv"), c.getField("cv"),
-                       lambda x, y: x * y),
-            F.lit(0.0), lambda acc, v: acc + v))
-        return dot / nrm
-
-    cands = F.transform(arr, lambda c: F.struct(
-        ccos(c).alias("c"), (-c.getField("cell")).alias("nc"),
-        c.getField("cell").alias("cell")))
-    return F.array_max(cands).getField("cell")
-
-
 def kmeans_assign_udf(rows):
-    """Nearest-centroid cell as an Arrow-batched argmax over the
-    driver-collected centroid table (``_cents_rows`` output) — the
-    production assignment path for derived K (bounded by the
-    ``KMEANS_K_MAX`` broadcast budget: 64Ki x 64 doubles = 32 MB in the
-    closure).  Why: the literal-expression argmax interprets K x EMB_DIM
-    ops per row (HOFs are CodegenFallback — see _simhash_bands_batch);
-    here it is one (batch x 64) @ (64 x K) matmul.
+    """Nearest-centroid cell (cosine, lowest-cell tie-break) as an
+    Arrow-batched argmax over the driver-collected centroid table
+    (``_cents_rows`` output, bounded by the ``KMEANS_K_MAX`` broadcast
+    budget: 64Ki x 64 doubles = 32 MB in the closure).  Why not a
+    built-in expression: a SQL argmax interprets K x EMB_DIM ops per row
+    (HOFs are CodegenFallback — see _simhash_bands_batch); here it is
+    one (batch x 64) @ (64 x K) matmul.
 
-    Parity vs the SQL forms: the SEED round is bit-identical (integer-
-    valued products < 2^53, any summation order exact — the same
-    argument as emb_dot_udf); against MEAN centroids (non-integer
-    doubles) numpy's summation order may differ from the sequential SQL
-    fold by ~1 ulp, which can flip an argmax only when two centroid
-    cosines tie within ~1e-15 relative — a measure-zero boundary effect
-    on a blocking heuristic whose downstream verify is exact.  The
-    registry queries therefore keep the SQL assignment (static DuckDB
-    oracles hash bit-identical plans); only the production CLI path
-    (no SQL oracle; gated by planted-dup e2e tests) uses this.
-    Tie-break parity: centroids are sorted by cell and np.argmax takes
-    the FIRST maximum — the lowest cell, exactly the (ccos, -cell)
-    struct-max rule."""
+    Parity with the DuckDB `_kmeans_sql_assign` fold is exact: vectors
+    and centroids are integer-valued (quantized vectors; centroids are
+    FLOORED means), so every dot and squared norm is an integer below
+    2^53 that any summation order computes exactly, and sqrt and the
+    one division are correctly rounded in both engines.  Tie-break
+    parity: centroids are sorted by cell and np.argmax takes the FIRST
+    maximum — the lowest cell, exactly the oracle's `cell ASC` rule."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import LongType
@@ -1692,43 +1578,25 @@ def kmeans_assign_udf(rows):
 
 def _lloyd_arrow(spark, data, seed_cents, rounds: int):
     """Lloyd training with driver-collected centroids and the Arrow
-    argmax assignment (`kmeans_assign_udf`) — the production path for
-    ANY derived K <= KMEANS_K_MAX (the literal/crossJoin split exists
-    only for the SQL engines).  Structure identical to `_lloyd_lit`:
-    zero n-row exchange per round, per-cell exact avgs, final lazy
-    assignment against the FINAL centroids."""
+    argmax assignment (`kmeans_assign_udf`) for any K <= KMEANS_K_MAX:
+    each round is scan -> Arrow argmax projection -> per-cell floored
+    avgs (map-side partials; the exchange carries K x 64 sums per map
+    partition) -> K-row collect, with no n-row exchange and no
+    materialization barrier.  Returns (cents_df, assign): the final
+    centroid table (a literal createDataFrame, so consumers never re-run
+    training lineage) and the lazy assignment (``data`` columns + cell)
+    against those FINAL centroids."""
     rows = _cents_rows(seed_cents)
     for _ in range(rounds):
         joined = data.withColumn("cell", kmeans_assign_udf(rows)(
             F.col("qv")))
         avgs = joined.groupBy("cell").agg(
-            *[F.avg(F.col("qv")[i]).alias(f"c{i}") for i in range(EMB_DIM)])
+            *[F.floor(F.avg(F.col("qv")[i])).alias(f"c{i}")
+              for i in range(EMB_DIM)])
         rows = _cents_rows(avgs.select(
             "cell", F.array(*[f"c{i}" for i in range(EMB_DIM)]).alias("cv")))
     cents = spark.createDataFrame(rows, "cell long, cv array<double>")
     assign = data.withColumn("cell", kmeans_assign_udf(rows)(F.col("qv")))
-    return cents, assign
-
-
-def _lloyd_lit(spark, data, seed_cents, rounds: int):
-    """Lloyd training with driver-collected centroids (small-K path,
-    K <= LIT_CENTS_MAX): each round is scan -> zero-shuffle literal
-    argmax projection -> per-cell exact int64 avgs (map-side partials,
-    the exchange carries K x 64 sums per map partition) -> K-row collect.
-    No n-row exchange and no assignment materialization barrier exist
-    anywhere in the round.  Returns (cents_df, assign): the final
-    centroid table (a literal createDataFrame, so consumers never
-    re-run training lineage) and the final lazy assignment
-    (vec_id, qv, cell) against those FINAL centroids."""
-    rows = _cents_rows(seed_cents)
-    for _ in range(rounds):
-        joined = data.withColumn("cell", _assign_cell_lit(rows))
-        avgs = joined.groupBy("cell").agg(
-            *[F.avg(F.col("qv")[i]).alias(f"c{i}") for i in range(EMB_DIM)])
-        rows = _cents_rows(avgs.select(
-            "cell", F.array(*[f"c{i}" for i in range(EMB_DIM)]).alias("cv")))
-    cents = spark.createDataFrame(rows, "cell long, cv array<double>")
-    assign = data.withColumn("cell", _assign_cell_lit(rows))
     return cents, assign
 
 
@@ -1771,14 +1639,14 @@ def _lloyd_lit(spark, data, seed_cents, rounds: int):
     """,
     doc="IVF-ANN with LEARNED centroids: deterministic k-means (seed = the "
         f"{K_IVF} lowest corpus vec_ids, 2 unrolled Lloyd iterations — "
-        "assign via broadcast cross join + map-side max_by argmax "
-        "(shuffles n rows, not n·K), means via per-dimension avg "
-        "aggregates over the intact array (no posexplode)), then probe "
+        "assign via the Arrow argmax over driver-collected centroids (no "
+        "n-row exchange), centroids = floored per-dimension means over "
+        "the intact array (no posexplode)), then probe "
         "the 2 nearest learned cells per query and exact-cosine top-5 "
         "inside them.  Replaces ann_ivf_probe's label-as-centroid "
         "shortcut with the production construction; search cost still "
         "scales with the probed fraction, training is O(iters * K * n) "
-        "map-side with only n-row exchanges",
+        "map-side with only K-row exchanges",
 )
 def ann_ivf_kmeans(spark, sf_dir):
     e = (t(spark, sf_dir, "embeddings")
@@ -1786,18 +1654,11 @@ def ann_ivf_kmeans(spark, sf_dir):
     data = e.filter(F.col("vec_id") >= 3)
     data = _persist(data)
     seeds = (e.filter((F.col("vec_id") >= 3) & (F.col("vec_id") < 3 + K_IVF))
-             .select((F.col("vec_id") - 3).alias("cell"),
-                     F.expr("transform(qv, x -> CAST(x AS DOUBLE))").alias("cv")))
-    # Driver-collected literal-centroid Lloyd (VERDICT r4 item 6): K=8
-    # is far under LIT_CENTS_MAX, so each round is a zero-shuffle argmax
-    # projection + per-cell exact int64 avgs (map-side partials; the one
-    # exchange carries K·64 sums per map partition) + a K-row collect —
-    # the crossJoin form's n-row assignment exchange and per-round
-    # materialization barrier are both gone.  The FINAL assignment is
-    # against the FINAL centroids (the probe ranks cells by cent2
-    # geometry, so membership must use the same centroids) and stays
-    # lazy: its sole consumer is the scorer.
-    cents, assign_last = _lloyd_lit(spark, data, seeds, rounds=2)
+             .select((F.col("vec_id") - 3).alias("cell"), F.col("qv").alias("cv")))
+    # The FINAL assignment is against the FINAL centroids (the probe
+    # ranks cells by cent2 geometry, so membership must use the same
+    # centroids) and stays lazy: its sole consumer is the scorer.
+    cents, assign_last = _lloyd_arrow(spark, data, seeds, rounds=2)
     q = (e.filter(F.col("vec_id") < 3)
          .select(F.col("vec_id").alias("query_id"), F.col("qv").alias("qa"))
          .withColumn("na", F.expr(
@@ -1808,14 +1669,14 @@ def ann_ivf_kmeans(spark, sf_dir):
              .withColumn("ccos", F.expr(f"{_CDOT_S} / {_CNRM_S}"))
              .withColumn("rn", F.row_number().over(wp))
              .filter(F.col("rn") <= 2).select("query_id", "cell"))
+    dot = emb_dot_udf()
     cand = (assign_last
             .withColumnRenamed("qv", "qb")
-            .withColumn("nb", F.expr(
-                "aggregate(zip_with(qb, qb, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")))
+            .withColumn("nb", dot(F.col("qb"), F.col("qb"))))
     scored = (
         cand.join(F.broadcast(probe), "cell")
         .join(F.broadcast(q), "query_id")
-        .withColumn("dot", F.expr(DOT_S))
+        .withColumn("dot", dot(F.col("qa"), F.col("qb")))
         .withColumn("cos_sim", F.expr(COS))
         .select("query_id", "vec_id", "cell", "cos_sim")
     )
@@ -1878,25 +1739,15 @@ def dedup_embedding_cosine(spark, sf_dir):
             .select((F.col("vec_id") + 100000).alias("vec_id"),
                     perturbed.alias("qv")))
     )
-    b = (base.withColumn("bands", _bands_array_s("qv", PPB_DEDUP))
-         .withColumn("nrm", F.expr(
-             "aggregate(zip_with(qv, qv, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")))
-    b = _persist(b)   # referenced 3x: band explode + both verify re-joins
+    # referenced 3x: band explode + both verify re-joins
+    b = _persist(_with_bands_nrm(base, PPB_DEDUP))
     cand, _dropped = emb_band_candidates(b)
     # _dropped is provably empty at sf geometry (cap 4096 >> any fixture
     # bucket), so the oracle sees identical pairs; a production caller uses
     # emb_band_candidates directly and sinks the drop report to metrics.
-    va = b.select(F.col("vec_id").alias("vec_a"), F.col("qv").alias("qa"),
-                  F.col("nrm").alias("na"))
-    vb = b.select(F.col("vec_id").alias("vec_b"), F.col("qv").alias("qb"),
-                  F.col("nrm").alias("nb"))
-    return (
-        cand.join(va, "vec_a").join(vb, "vec_b")
-        .withColumn("dot", F.expr(DOT_S))
-        .withColumn("cos_sim", F.expr(COS))
-        .filter(F.col("cos_sim") >= 0.98)
-        .select("vec_a", "vec_b", "cos_sim")
-    )
+    return (_scored_pairs(cand, b)
+            .filter(F.col("cos_sim") >= 0.98)
+            .select("vec_a", "vec_b", "cos_sim"))
 
 
 @register(
@@ -1936,8 +1787,8 @@ def dedup_embedding_cosine(spark, sf_dir):
     """,
     doc="SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540): "
         f"cluster embeddings with deterministic k-means (seed = the {K_IVF} "
-        "lowest vec_ids, 1 Lloyd iteration via the shared map-side max_by "
-        "assignment — n-row exchanges only), then prune WITHIN each cluster: "
+        "lowest vec_ids, 1 Lloyd iteration via the Arrow argmax over "
+        "driver-collected centroids), then prune WITHIN each cluster: "
         "any pair with exact quantized cosine >= 0.98 drops the higher "
         "vec_id (keep-first representative).  Working set = embeddings ∪ "
         "slightly-perturbed copies (first 4 dims x 0.95) of vec_id%5==0.  "
@@ -1966,16 +1817,12 @@ def dedup_semantic(spark, sf_dir):
     )
     data = _persist(data)  # read per Lloyd round + final assignment
     seeds = (e.filter(F.col("vec_id") < K_IVF)
-             .select(F.col("vec_id").alias("cell"),
-                     F.expr("transform(qv, x -> CAST(x AS DOUBLE))").alias("cv")))
-    # 1 Lloyd iteration, driver-collected literal centroids (zero-shuffle
-    # assignment; exact int64 avgs — order-independent, oracle-stable;
-    # see _lloyd_lit / ann_ivf_kmeans).  The final assignment is lazy:
-    # its sole consumer is semantic_cell_pairs, whose occupancy split
-    # persists the cell-partitioned form both self-join sides read from.
-    _cents, assigned = _lloyd_lit(spark, data, seeds, rounds=1)
-    m = assigned.withColumn("nrm", F.expr(
-        "aggregate(zip_with(qv, qv, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"))
+             .select(F.col("vec_id").alias("cell"), F.col("qv").alias("cv")))
+    # 1 Lloyd iteration (see _lloyd_arrow).  The final assignment is
+    # lazy: its sole consumer is semantic_cell_pairs, whose occupancy
+    # split persists the cell-partitioned form both self-join sides read.
+    _cents, assigned = _lloyd_arrow(spark, data, seeds, rounds=1)
+    m = assigned.withColumn("nrm", emb_dot_udf()(F.col("qv"), F.col("qv")))
     pairs, _dropped = semantic_cell_pairs(m)
     # _dropped is provably empty at sf geometry (cap 4096 >> any fixture
     # cell), so the DuckDB oracle sees identical pairs; a production
@@ -1991,11 +1838,53 @@ def estimate_parquet_rows(spark, path: str) -> int:
     return spark.read.parquet(path).count()
 
 
+def _valid_embeddings(spark, input_path: str):
+    """(vec_id, qv) rows of an embeddings parquet that the Arrow kernels
+    can take.  A row is rejected if its embedding is null, is not EMB_DIM
+    long, or holds a null element: numpy would abort the whole job on one
+    such ragged vector ("setting an array element with a sequence")."""
+    emb = F.col("embedding")
+    return (spark.read.parquet(input_path)
+            .filter((F.size(emb) == EMB_DIM)
+                    & (F.size(F.array_compact(emb)) == EMB_DIM))
+            .select("vec_id", F.expr(QUANT_S).alias("qv")))
+
+
+def _dedup_decisions(spark, pairs, id_col: str, output_dir: str,
+                     dropped, drop_kind: str, iterations: int) -> dict:
+    """The shared tail of the production dedup runs: fixpoint min-label
+    components over the verified ``pairs`` (first two columns = the pair
+    ids), keep-canonical decisions, and the sinks (pairs, decisions, the
+    ``dropped_<drop_kind>`` report) under ``output_dir``.  Returns the
+    written counts and the convergence metrics (no-silent-caps)."""
+    pairs = _persist(pairs, fresh=False)
+    a, b = pairs.columns[:2]
+    edges = (pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+             .unionByName(pairs.select(F.col(b).alias("src"),
+                                       F.col(a).alias("dst"))))
+    labels, cc = min_label_components_fixpoint(edges, max_rounds=iterations)
+    decisions = labels.select(F.col("node").alias(id_col),
+                              F.col("label").alias("component"),
+                              (F.col("label") == F.col("node"))
+                              .alias("is_canonical"))
+    pairs.write.mode("overwrite").parquet(f"{output_dir}/pairs")
+    decisions.write.mode("overwrite").parquet(f"{output_dir}/decisions")
+    dropped.write.mode("overwrite").parquet(
+        f"{output_dir}/dropped_{drop_kind}")
+    out_dec = spark.read.parquet(f"{output_dir}/decisions")
+    return {
+        "pairs": spark.read.parquet(f"{output_dir}/pairs").count(),
+        "non_canonical": out_dec.filter(~F.col("is_canonical")).count(),
+        f"dropped_hot_{drop_kind}": spark.read.parquet(
+            f"{output_dir}/dropped_{drop_kind}").count(),
+        **cc,
+    }
+
+
 def dedup_embeddings_run(spark, input_path: str, output_dir: str,
                          threshold_pct: int = 98, iterations: int = 20,
                          cap: int = EMB_BUCKET_CAP,
-                         skew_safe: bool = False,
-                         arrow_sig: bool = True) -> dict:
+                         skew_safe: bool = False) -> dict:
     """Production embedding near-dup entry point (``cli.py
     --dedup-embeddings``): the derived-geometry seam exercised end to end.
 
@@ -2007,6 +1896,8 @@ def dedup_embeddings_run(spark, input_path: str, output_dir: str,
     → min-label components → keep-canonical decisions.  Sinks (pairs,
     decisions, the hot-bucket drop report) land under ``output_dir`` and
     the drop count is surfaced in the returned metrics (no-silent-caps).
+    Rows the Arrow kernels cannot take (see ``_valid_embeddings``) are
+    skipped and counted as ``rejected_rows``.
 
     ``iterations`` bounds min-label propagation (``--cc-iterations``); the
     run iterates TO FIXPOINT inside that budget and the metrics carry
@@ -2016,60 +1907,21 @@ def dedup_embeddings_run(spark, input_path: str, output_dir: str,
     """
     import time
     t0 = time.perf_counter()
-    e = spark.read.parquet(input_path)
     n_est = estimate_parquet_rows(spark, input_path)
     ppb = emb_lsh_geometry(n_est)
-    q = e.select("vec_id", F.expr(QUANT_S).alias("qv"))
-    if arrow_sig:
-        # one Arrow pass computes all 4*ppb plane dots as a matmul plus
-        # the self-norm — bit-identical to the SQL folds (integer dots
-        # < 2^53; see emb_bands_nrm_udf) but not interpreter-bound
-        bn = emb_bands_nrm_udf(ppb)(F.col("qv"))
-        b = q.select("vec_id", "qv", bn.getField("bands").alias("bands"),
-                     bn.getField("nrm").alias("nrm"))
-    else:
-        b = (q.withColumn("bands", _bands_array_s("qv", ppb))
-             .withColumn("nrm", F.expr(
-                 "aggregate(zip_with(qv, qv, (x, y) -> x * y), "
-                 "0L, (acc, v) -> acc + v)")))
-    b = _persist(b)   # band explode + both verify re-joins
+    # band explode + both verify re-joins
+    b = _persist(_with_bands_nrm(_valid_embeddings(spark, input_path), ppb))
+    rejected = n_est - b.count()
     cand, dropped = emb_band_candidates(b, cap, skew_safe)
-    va = b.select(F.col("vec_id").alias("vec_a"), F.col("qv").alias("qa"),
-                  F.col("nrm").alias("na"))
-    vb = b.select(F.col("vec_id").alias("vec_b"), F.col("qv").alias("qb"),
-                  F.col("nrm").alias("nb"))
-    dot_col = (emb_dot_udf()(F.col("qa"), F.col("qb")) if arrow_sig
-               else F.expr(DOT_S))
-    pairs = (cand.join(va, "vec_a").join(vb, "vec_b")
-             .withColumn("dot", dot_col)
-             .withColumn("cos_sim", F.expr(COS))
+    pairs = (_scored_pairs(cand, b)
              .filter(F.col("cos_sim") * 100 >= threshold_pct)
              .select("vec_a", "vec_b", "cos_sim"))
-    pairs = _persist(pairs)
-    # min-label connected components over the pair graph (shared with
-    # dedup_components), then drop every non-canonical member
-    edges = (pairs.select(F.col("vec_a").alias("src"),
-                          F.col("vec_b").alias("dst"))
-             .unionByName(pairs.select(F.col("vec_b").alias("src"),
-                                       F.col("vec_a").alias("dst"))))
-    labels, cc = min_label_components_fixpoint(edges, max_rounds=iterations)
-    decisions = labels.select(F.col("node").alias("vec_id"),
-                              F.col("label").alias("component"),
-                              (F.col("label") == F.col("node"))
-                              .alias("is_canonical"))
-    pairs.write.mode("overwrite").parquet(f"{output_dir}/pairs")
-    decisions.write.mode("overwrite").parquet(f"{output_dir}/decisions")
-    dropped.write.mode("overwrite").parquet(f"{output_dir}/dropped_buckets")
-    out_pairs = spark.read.parquet(f"{output_dir}/pairs")
-    out_dec = spark.read.parquet(f"{output_dir}/decisions")
-    n_dropped = spark.read.parquet(f"{output_dir}/dropped_buckets").count()
+    out = _dedup_decisions(spark, pairs, "vec_id", output_dir, dropped,
+                           "buckets", iterations)
     return {
         "mode": "dedup_embeddings", "n_est": n_est, "ppb": ppb,
-        "bands": N_EMB_BANDS, "bucket_cap": cap,
-        "sig_engine": "arrow" if arrow_sig else "sql",
-        "pairs": out_pairs.count(),
-        "non_canonical": out_dec.filter(~F.col("is_canonical")).count(),
-        "dropped_hot_buckets": n_dropped, "skew_safe": skew_safe, **cc,
+        "bands": N_EMB_BANDS, "bucket_cap": cap, "rejected_rows": rejected,
+        "skew_safe": skew_safe, **out,
         "wall_s": round(time.perf_counter() - t0, 3),
     }
 
@@ -2077,8 +1929,7 @@ def dedup_embeddings_run(spark, input_path: str, output_dir: str,
 def dedup_texts_run(spark, input_path: str, output_dir: str,
                     hamming_max: int = 3, iterations: int = 20,
                     cap: int = EMB_BUCKET_CAP,
-                    skew_safe: bool = False,
-                    arrow_sig: bool = True) -> dict:
+                    skew_safe: bool = False) -> dict:
     """Production simhash near-dup entry point (``cli.py --dedup-texts``):
     the `simhash_band_bits` seam exercised end to end over a (doc_id,
     text) parquet.
@@ -2086,13 +1937,12 @@ def dedup_texts_run(spark, input_path: str, output_dir: str,
     Corpus size is estimated from the parquet footers and the band width
     DERIVED from it, so band space outgrows the corpus (expected random
     collisions per band n²/2^bits <= n).  Pipeline: 4-band pigeonhole
-    simhash (`_simhash_bands_from_text_s`) → hot-band-capped candidate
-    equi-join → exact hamming <= ``hamming_max`` verify over the full
-    4·bits signature (sum of per-band xor popcounts — bands partition
-    the signature) → fixpoint min-label components (convergence surfaced
-    in metrics) → keep-canonical decisions.  Sinks land under
-    ``output_dir``; the drop report count is surfaced in the returned
-    metrics (no-silent-caps).
+    simhash (`simhash_bands_udf`) → hot-band-capped candidate equi-join
+    → exact hamming <= ``hamming_max`` verify over the full 4·bits
+    signature (`_simhash_band_pairs`) → fixpoint min-label components
+    (convergence surfaced in metrics) → keep-canonical decisions.  Sinks
+    land under ``output_dir``; the drop report count is surfaced in the
+    returned metrics (no-silent-caps).
 
     ``hamming_max`` is bounded by the banding recall guarantee: 4-band
     pigeonhole only promises a band collision for pairs with hamming
@@ -2110,90 +1960,44 @@ def dedup_texts_run(spark, input_path: str, output_dir: str,
     n_est = estimate_parquet_rows(spark, input_path)
     bits = simhash_band_bits(n_est)
     d = spark.read.parquet(input_path).select("doc_id", "text")
-    # Arrow-batched numpy signature by default: the SQL form's HOF chain
-    # is CodegenFallback (interpreted row-at-a-time, ~19 core-ms/row
-    # measured at 2.4M rows) while the batch replica is bit-identical
-    # and ~10-40x faster — see _simhash_bands_batch.
-    band_col = (simhash_bands_udf(bits)(F.col("text")) if arrow_sig
-                else F.expr(_simhash_bands_from_text_s(bits)))
     sigs = (d.filter(F.expr(f"size({WORDS_S}) >= 1"))
-            .select("doc_id", band_col.alias("bands")))
+            .select("doc_id", simhash_bands_udf(bits)(F.col("text"))
+                    .alias("bands")))
     sigs = _persist(sigs)   # band explode + both verify legs
     ex = sigs.select(
         "doc_id", F.posexplode("bands").alias("band_idx", "band_bits"))
     kept, dropped = _occupancy_capped(ex, ["band_idx", "band_bits"],
                                       cap, skew_safe)
-    a, b = kept.alias("a"), kept.alias("b")
-    cand = (a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
-                   & (F.col("a.band_bits") == F.col("b.band_bits"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
-    sa = sigs.select(F.col("doc_id").alias("doc_a"),
-                     F.col("bands").alias("bands_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"),
-                     F.col("bands").alias("bands_b"))
-    ham = F.expr("aggregate(zip_with(bands_a, bands_b, "
-                 "(x, y) -> bit_count(x ^ y)), 0, (acc, v) -> acc + v)")
-    pairs = (cand.join(sa, "doc_a").join(sb, "doc_b")
-             .withColumn("hamming", ham.cast("int"))
-             .filter(F.col("hamming") <= hamming_max)
-             .select("doc_a", "doc_b", "hamming"))
-    pairs = _persist(pairs, fresh=False)
-    edges = (pairs.select(F.col("doc_a").alias("src"),
-                          F.col("doc_b").alias("dst"))
-             .unionByName(pairs.select(F.col("doc_b").alias("src"),
-                                       F.col("doc_a").alias("dst"))))
-    labels, cc = min_label_components_fixpoint(edges, max_rounds=iterations)
-    decisions = labels.select(F.col("node").alias("doc_id"),
-                              F.col("label").alias("component"),
-                              (F.col("label") == F.col("node"))
-                              .alias("is_canonical"))
-    pairs.write.mode("overwrite").parquet(f"{output_dir}/pairs")
-    decisions.write.mode("overwrite").parquet(f"{output_dir}/decisions")
-    dropped.write.mode("overwrite").parquet(f"{output_dir}/dropped_bands")
-    out_pairs = spark.read.parquet(f"{output_dir}/pairs")
-    out_dec = spark.read.parquet(f"{output_dir}/decisions")
-    n_dropped = spark.read.parquet(f"{output_dir}/dropped_bands").count()
+    pairs = _simhash_band_pairs(sigs, kept, hamming_max)
+    out = _dedup_decisions(spark, pairs, "doc_id", output_dir, dropped,
+                           "bands", iterations)
     return {
         "mode": "dedup_texts", "n_est": n_est, "band_bits": bits,
         "signature_bits": 4 * bits, "hamming_max": hamming_max,
-        "sig_engine": "arrow" if arrow_sig else "sql",
-        "band_cap": cap,
-        "pairs": out_pairs.count(),
-        "non_canonical": out_dec.filter(~F.col("is_canonical")).count(),
-        "dropped_hot_bands": n_dropped, "skew_safe": skew_safe, **cc,
+        "band_cap": cap, "skew_safe": skew_safe, **out,
         "wall_s": round(time.perf_counter() - t0, 3),
     }
 
 
 def semantic_cell_pairs(m, cap: int = EMB_BUCKET_CAP,
                         threshold: float = 0.98,
-                        skew_safe: bool = False,
-                        arrow_dot: bool = False):
+                        skew_safe: bool = False):
     """Intra-cell >=``threshold`` cosine pairing over assigned rows ``m`` =
     (cell, vec_id, qv, nrm), hot-cell capped.  A dense embedding mode —
     boilerplate pages are common in web data — can land millions of
     vectors in ONE k-means cell, going quadratic in the self-join below
     no matter what K is; cells over the cap are excluded from pairing and
     RETURNED as (cell, bsz) (the no-silent-caps rule: callers surface the
-    report).  Same guard as the sibling LSH path's _bucket_capped.
-
-    ``arrow_dot``: verify with the Arrow-batched exact int64 dot
-    (`emb_dot_udf` — bit-identical, see there) instead of the
-    interpreted DOT_S fold; the production path sets it, the registry
-    query keeps the SQL form so its static plan/oracle stay pinned."""
+    report).  Same guard as the sibling LSH path's _bucket_capped.  The
+    verify dot is the Arrow-batched exact int64 `emb_dot_udf`."""
     kept, dropped = _occupancy_capped(m, ["cell"], cap, skew_safe)
     a = kept.select("cell", F.col("vec_id").alias("vec_a"),
                     F.col("qv").alias("qa"), F.col("nrm").alias("na"))
     y = kept.select("cell", F.col("vec_id").alias("vec_b"),
                     F.col("qv").alias("qb"), F.col("nrm").alias("nb"))
-    dot_col = (emb_dot_udf()(F.col("qa"), F.col("qb")) if arrow_dot
-               else F.expr(DOT_S))
     pairs = (a.join(y, "cell")
              .filter(F.col("vec_a") < F.col("vec_b"))
-             .withColumn("dot", dot_col)
+             .withColumn("dot", emb_dot_udf()(F.col("qa"), F.col("qb")))
              .withColumn("cos_sim", F.expr(COS))
              .filter(F.col("cos_sim") >= threshold))
     return pairs, dropped
@@ -2203,8 +2007,7 @@ def dedup_semantic_run(spark, input_path: str, output_dir: str,
                        threshold_pct: int = 98, lloyd_iters: int = 1,
                        iterations: int = 20, target_cell_size: int = 1024,
                        cap: int = EMB_BUCKET_CAP,
-                       skew_safe: bool = False,
-                       arrow_sig: bool = True) -> dict:
+                       skew_safe: bool = False) -> dict:
     """Production SemDeDup entry point (``cli.py --dedup-semantic``,
     VERDICT r4 item 2): the ``kmeans_k`` derivation seam exercised end to
     end over a (vec_id, embedding array<float/double>) parquet.
@@ -2217,84 +2020,40 @@ def dedup_semantic_run(spark, input_path: str, output_dir: str,
     expected cell occupancy stays ~target_cell_size regardless of n.
 
     Pipeline: footer n → derived K → deterministic seeds (the K lowest
-    vec_ids) → ``lloyd_iters`` Lloyd rounds (broadcast crossJoin +
-    map-side max_by assignment carrying the vector, exact int64 per-dim
-    avg means) → final assignment against the FINAL centroids →
-    hot-cell-capped intra-cell exact-cosine pairing → fixpoint min-label
-    components (convergence surfaced) → keep-canonical decisions.  Sinks
-    (pairs, decisions, dropped_cells) land under ``output_dir``; derived
-    K, expected occupancy, the drop count and the component convergence
-    metrics are all returned (no-silent-caps)."""
+    vec_ids) → ``lloyd_iters`` Lloyd rounds (``_lloyd_arrow``: Arrow
+    argmax assignment, floored per-dim mean centroids) → final assignment
+    against the FINAL centroids → hot-cell-capped intra-cell
+    exact-cosine pairing → fixpoint min-label components (convergence
+    surfaced) → keep-canonical decisions.  Sinks (pairs, decisions,
+    dropped_cells) land under ``output_dir``; derived K, expected
+    occupancy, the drop count, the rejected-row count (see
+    ``_valid_embeddings``) and the component convergence metrics are all
+    returned (no-silent-caps)."""
     import time
     t0 = time.perf_counter()
     n_est = estimate_parquet_rows(spark, input_path)
     k = kmeans_k(n_est, target_cell_size)
-    data = (spark.read.parquet(input_path)
-            .select("vec_id", F.expr(QUANT_S).alias("qv")))
-    data = _persist(data)   # read per Lloyd round + final assignment
+    # read per Lloyd round + final assignment
+    data = _persist(_valid_embeddings(spark, input_path))
+    rejected = n_est - data.count()
     # deterministic seeds: the K lowest vec_ids (TakeOrdered — no full
     # sort); cell id = the seed's vec_id, as in the registry query
     seeds = (data.orderBy("vec_id").limit(k)
-             .select(F.col("vec_id").alias("cell"),
-                     F.expr("transform(qv, x -> CAST(x AS DOUBLE))")
-                     .alias("cv")))
-    if arrow_sig:
-        # Arrow argmax covers any derived K under the broadcast budget
-        # in one branch (the literal/crossJoin split below only matters
-        # for the SQL engines) — see kmeans_assign_udf for the parity
-        # contract
-        _cents, assigned = _lloyd_arrow(spark, data, seeds, lloyd_iters)
-    elif k <= LIT_CENTS_MAX:
-        # small derived K: driver-collected literal centroids, zero-
-        # shuffle assignment per round (see _lloyd_lit)
-        _cents, assigned = _lloyd_lit(spark, data, seeds, lloyd_iters)
-    else:
-        # large derived K: broadcast-crossJoin assignment (map-side
-        # max_by carrying the vector, one n-row exchange per round) —
-        # a K x 64-double literal plan stops being worth building here
-        cents = seeds
-        for _ in range(lloyd_iters):
-            joined = _assign_nearest(data, cents, carry_vec=True)
-            avgs = joined.groupBy("cell").agg(
-                *[F.avg(F.col("qv")[i]).alias(f"c{i}")
-                  for i in range(EMB_DIM)])
-            cents = avgs.select(
-                "cell",
-                F.array(*[f"c{i}" for i in range(EMB_DIM)]).alias("cv"))
-        assigned = _assign_nearest(data, cents, materialize=False,
-                                   carry_vec=True)
-    nrm_col = (emb_dot_udf()(F.col("qv"), F.col("qv")) if arrow_sig
-               else F.expr("aggregate(zip_with(qv, qv, (x, y) -> x * y), "
-                           "0L, (acc, v) -> acc + v)"))
-    m = assigned.withColumn("nrm", nrm_col)
+             .select(F.col("vec_id").alias("cell"), F.col("qv").alias("cv")))
+    _cents, assigned = _lloyd_arrow(spark, data, seeds, lloyd_iters)
+    m = assigned.withColumn("nrm", emb_dot_udf()(F.col("qv"), F.col("qv")))
     pairs, dropped = semantic_cell_pairs(m, cap, threshold_pct / 100.0,
-                                         skew_safe, arrow_dot=arrow_sig)
-    pairs = _persist(pairs.select("vec_a", "vec_b", "cos_sim"), fresh=False)
-    edges = (pairs.select(F.col("vec_a").alias("src"),
-                          F.col("vec_b").alias("dst"))
-             .unionByName(pairs.select(F.col("vec_b").alias("src"),
-                                       F.col("vec_a").alias("dst"))))
-    labels, cc = min_label_components_fixpoint(edges, max_rounds=iterations)
-    decisions = labels.select(F.col("node").alias("vec_id"),
-                              F.col("label").alias("component"),
-                              (F.col("label") == F.col("node"))
-                              .alias("is_canonical"))
-    pairs.write.mode("overwrite").parquet(f"{output_dir}/pairs")
-    decisions.write.mode("overwrite").parquet(f"{output_dir}/decisions")
-    dropped.write.mode("overwrite").parquet(f"{output_dir}/dropped_cells")
-    out_pairs = spark.read.parquet(f"{output_dir}/pairs")
-    out_dec = spark.read.parquet(f"{output_dir}/decisions")
-    n_dropped = spark.read.parquet(f"{output_dir}/dropped_cells").count()
+                                         skew_safe)
+    out = _dedup_decisions(spark, pairs.select("vec_a", "vec_b", "cos_sim"),
+                           "vec_id", output_dir, dropped, "cells",
+                           iterations)
     return {
         "mode": "dedup_semantic", "n_est": n_est, "k": k,
         "target_cell_size": target_cell_size,
         "expected_occupancy": (round(n_est / k, 1) if k else None),
         "lloyd_iters": lloyd_iters, "cell_cap": cap,
-        "threshold_pct": threshold_pct,
-        "sig_engine": "arrow" if arrow_sig else "sql",
-        "pairs": out_pairs.count(),
-        "non_canonical": out_dec.filter(~F.col("is_canonical")).count(),
-        "dropped_hot_cells": n_dropped, "skew_safe": skew_safe, **cc,
+        "threshold_pct": threshold_pct, "rejected_rows": rejected,
+        "skew_safe": skew_safe, **out,
         "wall_s": round(time.perf_counter() - t0, 3),
     }
 
@@ -2663,6 +2422,12 @@ def multimodal_meta_features(spark, sf_dir):
     return mm.join(mf, "doc_id")
 
 
+# the extract_pipeline oracle's golden, located relative to this checkout
+EXTRACT_GOLDEN = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "tests", "golden", "extract_spans.parquet")
+
+
 @register(
     "extract_pipeline",
     # The per-doc heuristic chain is not SQL-expressible, so the DuckDB
@@ -2672,9 +2437,9 @@ def multimodal_meta_features(spark, sf_dir):
     # that pair and doc_ids collide across scales with different texts.
     # Exact north-rule parity is additionally enforced by
     # tests/test_extract_spark.py against the same pure-Python oracle.
-    sql="""
+    sql=f"""
     SELECT g.doc_id, g.kind, g.text, g.media_ref, g.offset
-    FROM read_parquet('/root/repo/tests/golden/extract_spans.parquet') g
+    FROM read_parquet('{EXTRACT_GOLDEN}') g
     JOIN documents d
       ON d.doc_id = g.src_doc_id
      AND md5(COALESCE(d.text, '')) = g.text_md5

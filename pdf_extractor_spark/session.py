@@ -26,10 +26,11 @@ ARROW_MAX_RECORDS = 64
 def get_spark(app: str = "pdf_extractor_spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     # Python workers must import this package to unpickle its pandas-UDF
-    # closures (the Arrow signature paths).  Local workers inherit the
-    # driver env, so pin the package parent onto PYTHONPATH instead of
-    # relying on the caller's cwd; a cluster submit ships the package via
-    # `spark-submit --py-files` and this is a no-op there.
+    # closures (the Arrow kernels).  Local workers inherit the driver env,
+    # so pin the package parent onto PYTHONPATH instead of relying on the
+    # caller's cwd, and pass it as the executor env too, for workers whose
+    # env was fixed before this process changed its own.  A cluster
+    # submit ships the package via `spark-submit --py-files`.
     pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")
     if pkg_parent not in pp.split(os.pathsep):
@@ -59,6 +60,7 @@ def get_spark(app: str = "pdf_extractor_spark", master: str | None = None,
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.executorEnv.PYTHONPATH", pkg_parent)
     )
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -5,12 +5,31 @@ brute-force all-pairs cosine oracle on a small slice."""
 
 import json
 
+import duckdb
 import pyspark.sql.functions as F
+import pytest
 
 from pdf_extractor_spark.corpus import (
-    COS, DOT_S, PPB_DEDUP, QUANT_S, emb_lsh_geometry, estimate_parquet_rows)
+    COS, DOT_S, PPB_DEDUP, QUANT_S, emb_lsh_geometry, estimate_parquet_rows,
+    simhash_bands_udf)
 
 SF_DIR = "/root/testdata/sf0.001"
+
+# one row of each kind the Arrow kernels cannot take: a null embedding,
+# a short one, and one holding a null element
+BAD_IDS = (900001, 900002, 900003)
+
+
+def _with_bad_rows(spark, e):
+    bad = spark.createDataFrame(
+        [(BAD_IDS[0], None), (BAD_IDS[1], [0.1] * 63),
+         (BAD_IDS[2], [0.1] * 63 + [None])],
+        "vec_id long, embedding array<double>")
+    return e.unionByName(bad)
+
+
+def _clean(df):
+    return df.filter(~F.col("vec_id").isin(*BAD_IDS))
 
 
 def test_geometry_derived_from_million_row_footer(spark, tmp_path):
@@ -34,7 +53,8 @@ def test_geometry_derived_from_million_row_footer(spark, tmp_path):
 def _engineered_input(spark, path: str) -> None:
     """sf0.001 embeddings ∪ perturbed copies (first 8 of 64 dims x 0.9,
     the registry fixture construction whose >=0.98 pairs the recall
-    property test already proves the banding recalls losslessly)."""
+    property test already proves the banding recalls losslessly) ∪ one
+    bad row of each kind (BAD_IDS)."""
     e = (spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
          .select("vec_id",
                  F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
@@ -45,7 +65,8 @@ def _engineered_input(spark, path: str) -> None:
                        "transform(embedding, (x, i) -> CASE WHEN i < 8 "
                        "THEN (floor(x * 10000 * 0.9) + 0.5) / 10000.0 "
                        "ELSE x END)").alias("embedding")))
-    e.unionByName(dup).write.mode("overwrite").parquet(path)
+    _with_bad_rows(spark, e.unionByName(dup)).write.mode(
+        "overwrite").parquet(path)
 
 
 def _fixpoint_labels(pairs: set) -> dict:
@@ -82,10 +103,11 @@ def test_cli_decisions_match_bruteforce(spark, tmp_path, capsys):
     assert metrics["mode"] == "dedup_embeddings"
     assert metrics["ppb"] == PPB_DEDUP          # small n -> sf geometry
     assert metrics["dropped_hot_buckets"] == 0  # cap inert on the slice
+    assert metrics["rejected_rows"] == len(BAD_IDS)
 
-    # brute-force oracle: all-pairs exact quantized cosine over the SAME
-    # input file and quantization
-    q = (spark.read.parquet(inp)
+    # brute-force oracle: all-pairs exact quantized cosine over the clean
+    # rows of the SAME input file and quantization
+    q = (_clean(spark.read.parquet(inp))
          .select("vec_id", F.expr(QUANT_S).alias("qv"))
          .withColumn("nrm", F.expr(
              "aggregate(zip_with(qv, qv, (x, y) -> x * y), "
@@ -123,22 +145,40 @@ class TestDedupTexts:
     brute-force hamming oracle."""
 
     def test_band_array_matches_registry_signature_at_15_bits(self, spark):
-        """At bits=15 the 4-band array must equal the 60-bit registry
-        signature's band split bit for bit (same vote rule)."""
+        """At bits=15 the Arrow 4-band array must equal the band split of
+        the DuckDB oracle's 60-bit registry signature bit for bit (same
+        vote rule)."""
         from pdf_extractor_spark.corpus import (
-            WORDS_S, _neardup_corpus_s, _simhash_bands_from_text_s,
-            _simhash_nib_from_text_s)
+            NEARDUP_CORPUS_D, WORDS_D, WORDS_S, _neardup_corpus_s,
+            _simhash_nib_expr_d)
         corpus = (_neardup_corpus_s(spark, SF_DIR)
                   .filter(F.expr(f"size({WORDS_S}) >= 1")))
-        rows = (corpus.select(
-            "doc_id",
-            F.expr(_simhash_nib_from_text_s(60)).alias("sig60"),
-            F.expr(_simhash_bands_from_text_s(15)).alias("bands"))
-            .collect())
-        assert rows
-        for r in rows:
-            want = [(r.sig60 >> (15 * k)) & 0x7FFF for k in range(4)]
-            assert list(r.bands) == want, r.doc_id
+        got = {r.doc_id: list(r.bands) for r in corpus.select(
+            "doc_id", simhash_bands_udf(15)(F.col("text")).alias("bands"))
+            .collect()}
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW documents AS "
+                    f"SELECT * FROM '{SF_DIR}/documents.parquet'")
+        sigs = con.execute(f"""
+            WITH {NEARDUP_CORPUS_D}
+            SELECT doc_id, {_simhash_nib_expr_d(60)} AS sig60
+            FROM (SELECT doc_id, list_transform({WORDS_D}, w -> md5(w)) AS hs
+                  FROM corpus)
+            WHERE len(hs) >= 1""").fetchall()
+        want = {d: [(s >> (15 * k)) & 0x7FFF for k in range(4)]
+                for d, s in sigs}
+        assert want
+        assert got == want
+
+    def test_cli_rejects_hamming_max_beyond_pigeonhole(self, tmp_path):
+        """--hamming-max above bands-1 is a usage error (exit 2), raised
+        by argparse before any Spark work."""
+        from pdf_extractor_spark.cli import main
+        with pytest.raises(SystemExit) as exc:
+            main(["--dedup-texts", str(tmp_path / "in"),
+                  "--output", str(tmp_path / "out"), "--hamming-max", "4"])
+        assert exc.value.code == 2
+        assert not (tmp_path / "out").exists()
 
     def test_band_width_derives_from_footer(self, spark, tmp_path):
         """10^6-row footer -> 20-bit bands (> the 15-bit sf default)."""
@@ -154,13 +194,12 @@ class TestDedupTexts:
         """bits > 32 switches to the doubled word digest (signature wider
         than one md5); planted exact dups must still collide in every
         band and verify at hamming 0."""
-        from pdf_extractor_spark.corpus import _simhash_bands_from_text_s
         sigs = (spark.createDataFrame(
             [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta"),
              (3, "wholly different words here")],
             "doc_id long, text string")
-            .select("doc_id",
-                    F.expr(_simhash_bands_from_text_s(40)).alias("bands"))
+            .select("doc_id", simhash_bands_udf(40)(F.col("text"))
+                    .alias("bands"))
             .collect())
         by_id = {r.doc_id: list(r.bands) for r in sigs}
         assert by_id[1] == by_id[2]
@@ -169,7 +208,6 @@ class TestDedupTexts:
 
     def test_cli_decisions_match_bruteforce(self, spark, tmp_path, capsys):
         from pdf_extractor_spark.corpus import (WORDS_S, _neardup_corpus_s,
-                                                _simhash_bands_from_text_s,
                                                 simhash_band_bits)
         inp = str(tmp_path / "txt_in")
         out = str(tmp_path / "txt_out")
@@ -186,8 +224,8 @@ class TestDedupTexts:
         # brute-force oracle: all-pairs hamming over the SAME signature
         sigs = (spark.read.parquet(inp)
                 .filter(F.expr(f"size({WORDS_S}) >= 1"))
-                .select("doc_id", F.expr(_simhash_bands_from_text_s(
-                    metrics["band_bits"])).alias("bands")))
+                .select("doc_id", simhash_bands_udf(metrics["band_bits"])(
+                    F.col("text")).alias("bands")))
         a = sigs.select(F.col("doc_id").alias("doc_a"),
                         F.col("bands").alias("bands_a"))
         b = sigs.select(F.col("doc_id").alias("doc_b"),
@@ -240,10 +278,12 @@ class TestDedupSemantic:
         """Engineered input: sf0.001 embeddings ∪ EXACT copies of
         vec_id%4==0 (identical qv ⇒ identical centroid cosines ⇒ the
         deterministic tie-break assigns both to the same cell, so every
-        dup pair is guaranteed intra-cell).  Produced pairs must be a
-        subset of the brute-force >=0.98 oracle (verify is exact) and a
-        superset of the planted exact dups; decisions must equal the
-        fixpoint min-label over the produced pairs."""
+        dup pair is guaranteed intra-cell) ∪ one bad row of each kind
+        (BAD_IDS), which must be counted as rejected.  Produced pairs must
+        be a subset of the brute-force >=0.98 oracle over the clean rows
+        (verify is exact) and a superset of the planted exact dups;
+        decisions must equal the fixpoint min-label over the produced
+        pairs."""
         from pdf_extractor_spark.corpus import kmeans_k
         inp = str(tmp_path / "sem_in")
         out = str(tmp_path / "sem_out")
@@ -252,7 +292,7 @@ class TestDedupSemantic:
         dup = (e.filter(F.col("vec_id") % 4 == 0)
                .select((F.col("vec_id") + 100000).alias("vec_id"),
                        "embedding"))
-        e.unionByName(dup).write.parquet(inp)
+        _with_bad_rows(spark, e.unionByName(dup)).write.parquet(inp)
 
         from pdf_extractor_spark.cli import main
         # --target-cell-size 64 pushes the derived K past the sf floor
@@ -266,8 +306,9 @@ class TestDedupSemantic:
         assert metrics["k"] > 8                  # derived, not pinned
         assert metrics["dropped_hot_cells"] == 0
         assert metrics["cc_converged"] is True
+        assert metrics["rejected_rows"] == len(BAD_IDS)
 
-        q = (spark.read.parquet(inp)
+        q = (_clean(spark.read.parquet(inp))
              .select("vec_id", F.expr(QUANT_S).alias("qv"))
              .withColumn("nrm", F.expr(
                  "aggregate(zip_with(qv, qv, (x, y) -> x * y), "

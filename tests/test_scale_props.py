@@ -82,19 +82,16 @@ class TestSimhashBlocking:
         """Every engineered original/truncated pair within 60-bit hamming
         distance 3 must be found by the banded variant (4 disjoint 15-bit
         bands + hamming 3 => at least one band matches exactly)."""
-        from pdf_extractor_spark.corpus import _simhash_nib_from_text_s
-        sigs = (
-            _neardup_corpus_s(spark, SF_DIR)
-            .filter(F.expr(f"size({WORDS_S}) >= 1"))
-            .select("doc_id",
-                    F.expr(_simhash_nib_from_text_s(60)).alias("simhash"))
-        )
-        o, c = sigs.alias("o"), sigs.alias("c")
-        eng = (o.join(c, F.col("c.doc_id") == F.col("o.doc_id") + 2000000)
-               .select(F.col("o.doc_id").alias("doc_a"),
-                       F.col("c.doc_id").alias("doc_b"),
-                       F.expr("bit_count(o.simhash ^ c.simhash)").alias("ham")))
-        want = {(r.doc_a, r.doc_b) for r in eng.collect() if r.ham <= 3}
+        from pdf_extractor_spark.corpus import simhash_bands_udf
+        sigs = {r.doc_id: sum(b << (15 * k) for k, b in enumerate(r.bands))
+                for r in _neardup_corpus_s(spark, SF_DIR)
+                .filter(F.expr(f"size({WORDS_S}) >= 1"))
+                .select("doc_id",
+                        simhash_bands_udf(15)(F.col("text")).alias("bands"))
+                .collect()}
+        want = {(d, d + 2000000) for d, s in sigs.items()
+                if d + 2000000 in sigs
+                and bin(s ^ sigs[d + 2000000]).count("1") <= 3}
         assert want, "fixture should contain near pairs"
         got = {(r.doc_a, r.doc_b)
                for r in REGISTRY["dedup_simhash_blocked"].spark(spark, SF_DIR)
@@ -157,15 +154,15 @@ class TestLshGeometry:
         the cell must be excluded (kept occupancy <= cap), its exclusion
         REPORTED, and unrelated vectors' candidates unaffected."""
         from pdf_extractor_spark.corpus import (
-            QUANT_S, _bands_array_s, _bucket_capped, emb_band_candidates,
+            QUANT_S, _bucket_capped, _with_bands_nrm, emb_band_candidates,
             PPB_DEDUP, N_EMB_BANDS)
         hot = [(i, [0.5] * 64) for i in range(40)]
         cold = [(100 + i, [0.01 * (i + j) for j in range(64)])
                 for i in range(4)]
         df = spark.createDataFrame(
             hot + cold, "vec_id long, embedding array<double>")
-        b = (df.select("vec_id", F.expr(QUANT_S).alias("qv"))
-             .withColumn("bands", _bands_array_s("qv", PPB_DEDUP)))
+        b = _with_bands_nrm(df.select("vec_id", F.expr(QUANT_S).alias("qv")),
+                            PPB_DEDUP)
         ex = b.select(
             "vec_id", F.posexplode("bands").alias("band_idx", "bucket"))
         kept, dropped = _bucket_capped(ex, cap=10)
@@ -229,10 +226,10 @@ class TestLshGeometry:
         """At the default cap the sf fixture drops nothing — the guard is
         provably inert where the DuckDB oracle pins exact pairs."""
         from pdf_extractor_spark.corpus import (
-            QUANT_S, _bands_array_s, _bucket_capped, PPB_DEDUP)
-        e = (spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-             .select("vec_id", F.expr(QUANT_S).alias("qv"))
-             .withColumn("bands", _bands_array_s("qv", PPB_DEDUP)))
+            QUANT_S, _bucket_capped, _with_bands_nrm, PPB_DEDUP)
+        e = _with_bands_nrm(
+            spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+            .select("vec_id", F.expr(QUANT_S).alias("qv")), PPB_DEDUP)
         ex = e.select(
             "vec_id", F.posexplode("bands").alias("band_idx", "bucket"))
         _, dropped = _bucket_capped(ex)

@@ -1,16 +1,20 @@
-"""Fuzzed cross-engine parity of the let-bound signature expressions.
+"""Fuzzed cross-engine parity of the signature kernels.
 
-The round-2 perf rewrite moved minhash/simhash/shingle computation into
-single let-bound SQL expressions (corpus.let1).  These tests pin their
-semantics against independent pure-python replicas over adversarial texts
-(empty, repeated separators, unicode, 1-2 word docs, duplicate words) —
-the oracle gate only exercises the fixture corpus, so an edge-case
-divergence (e.g. a boundary slip in the lane slicing or vote parity)
-would otherwise surface only at deploy.
+The minhash/shingle signatures are single let-bound SQL expressions
+(corpus.let1); the simhash bands, sign-LSH bands, verify dots and k-means
+argmax are Arrow-batched numpy kernels.  These tests pin both against
+independent pure-python replicas or the DuckDB oracle forms over
+adversarial inputs (empty, repeated separators, unicode, 1-2 word docs,
+duplicate words; negative/zero vectors, tied centroids) — the oracle gate
+only exercises the fixture corpus, so an edge-case divergence (e.g. a
+boundary slip in the lane slicing or vote parity) would otherwise
+surface only at deploy.
 """
 
 import hashlib
+import random
 
+import duckdb
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -18,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from pdf_extractor_spark.corpus import (MINHASH_SIG_S, SHINGLES_FROM_TEXT_S,
-                                        _simhash_nib_from_text_s)
+                                        simhash_bands_udf)
 
 # words are split on a single space and empties dropped; include unicode,
 # punctuation and runs of spaces to stress the boundary conditions
@@ -103,12 +107,14 @@ def test_minhash_sig_matches_python_replica(spark, fuzz_texts):
 
 
 def test_simhash60_matches_python_replica(spark, fuzz_texts):
+    """The 15-bit band kernel, reassembled, is the 60-bit signature."""
     texts = [t for t in fuzz_texts if _words(t)]
     rows = _run_texts(
         spark, texts,
-        [F.col("text"), F.expr(_simhash_nib_from_text_s(60)).alias("sig")])
+        [F.col("text"), simhash_bands_udf(15)(F.col("text")).alias("bands")])
     for r in rows:
-        assert r.sig == _py_simhash_nib(r.text), repr(r.text)
+        sig = sum(b << (15 * k) for k, b in enumerate(r.bands))
+        assert sig == _py_simhash_nib(r.text), repr(r.text)
 
 
 @settings(max_examples=30, deadline=None)
@@ -134,10 +140,10 @@ def spark_session_holder(spark):
 # ---- Arrow-batch production signature (_simhash_bands_batch) parity ----
 
 def _py_simhash_bands(text, bits):
-    """Independent replica of the SQL band rule (`_simhash_bands_from_
-    text_s`): bit j of the 4*bits signature votes on bit j%4 of hex
-    digit j//4 of the (possibly doubled) word digest; band k packs bits
-    [k*bits, (k+1)*bits)."""
+    """Independent replica of the band rule (`_simhash_bands_batch`): bit
+    j of the 4*bits signature votes on bit j%4 of hex digit j//4 of the
+    (possibly doubled) word digest; band k packs bits [k*bits,
+    (k+1)*bits)."""
     ws = _words(text)
     if not ws:
         return None
@@ -169,18 +175,27 @@ def test_simhash_bands_batch_matches_replica(fuzz_texts, bits):
 
 @pytest.mark.parametrize("bits", [15, 21, 40])
 def test_simhash_bands_udf_matches_sql_expr(spark, fuzz_texts, bits):
-    """The production Arrow path vs the SQL/oracle reference, in Spark,
-    including unicode (exercises UTF-8 digest parity end to end)."""
-    from pdf_extractor_spark.corpus import (_simhash_bands_from_text_s,
-                                            simhash_bands_udf)
+    """The Arrow UDF in Spark vs the DuckDB oracle form (band k =
+    `_simhash_nib_expr_d(bits, k*bits)`) and the pure-python replica,
+    including unicode (exercises UTF-8 digest parity end to end) and the
+    doubled digest beyond 32 bits."""
+    from pdf_extractor_spark.corpus import WORDS_D, _simhash_nib_expr_d
     texts = [t for t in fuzz_texts if _words(t)]
-    rows = _run_texts(
+    got = {r.text: list(r.bands) for r in _run_texts(
         spark, texts,
-        [F.col("text"),
-         simhash_bands_udf(bits)(F.col("text")).alias("arrow_bands"),
-         F.expr(_simhash_bands_from_text_s(bits)).alias("sql_bands")])
-    for r in rows:
-        assert list(r.arrow_bands) == list(r.sql_bands), repr(r.text)
+        [F.col("text"), simhash_bands_udf(bits)(F.col("text")).alias("bands")])}
+    digest = "md5(w)" if bits <= 32 else "md5(w) || md5('#' || w)"
+    bands = ", ".join(_simhash_nib_expr_d(bits, k * bits) for k in range(4))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (text VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?)", [(t,) for t in texts])
+    want = {t: list(b) for t, b in con.execute(
+        f"SELECT text, [{bands}] FROM (SELECT text, "
+        f"list_transform({WORDS_D}, w -> {digest}) AS hs FROM t)").fetchall()}
+    assert len(want) == len(set(texts))
+    assert got == want
+    for t in texts:
+        assert got[t] == _py_simhash_bands(t, bits), repr(t)
 
 
 @settings(max_examples=25, deadline=None)
@@ -195,34 +210,34 @@ def test_simhash_bands_batch_fuzz(texts):
 
 # ---- Arrow-batch embedding LSH bands / norm / dot parity ----
 
+def _int_vectors(n: int, seed: int, lo: int, hi: int) -> list:
+    rng = random.Random(seed)
+    return [[rng.randint(lo, hi) for _ in range(64)] for _ in range(n)]
+
+
 @pytest.mark.parametrize("ppb", [8, 12])
 def test_emb_bands_nrm_udf_matches_sql_expr(spark, ppb):
-    """Production Arrow banding vs the SQL/oracle reference on quantized
-    vectors spanning negatives, zeros, and the planted-dup case.  The
-    plane dots are integer-valued < 2^53, so any float64 summation order
-    is exact — the two paths must agree bit for bit."""
-    from pyspark.sql import functions as F
-
-    from pdf_extractor_spark.corpus import (EMB_DIM, _bands_array_s,
+    """Arrow banding + norm vs the DuckDB oracle forms (`_bands_array_d`,
+    `NORM_D`) on quantized vectors spanning negatives, zeros, and the
+    planted-dup case.  The plane dots are integer-valued < 2^53, so any
+    summation order is exact — the two engines must agree bit for bit."""
+    from pdf_extractor_spark.corpus import (NORM_D, _bands_array_d,
                                             emb_bands_nrm_udf)
-    df = (spark.range(64).select(
-        F.col("id").alias("vec_id"),
-        F.expr(f"transform(sequence(0, {EMB_DIM - 1}), i -> "
-               "CAST(pmod(xxhash64(id, i), 997) - 498 AS BIGINT))")
-        .alias("qv")))
+    vecs = _int_vectors(62, ppb, -498, 498) + [[0] * 64] * 2
+    data = list(enumerate(vecs))
     bn = emb_bands_nrm_udf(ppb)(F.col("qv"))
-    rows = (df.select(
-        "vec_id",
-        bn.getField("bands").alias("arrow_bands"),
-        bn.getField("nrm").alias("arrow_nrm"),
-        _bands_array_s("qv", ppb).alias("sql_bands"),
-        F.expr("aggregate(zip_with(qv, qv, (x, y) -> x * y), 0L, "
-               "(acc, v) -> acc + v)").alias("sql_nrm"))
-        .collect())
-    assert rows
-    for r in rows:
-        assert list(r.arrow_bands) == list(r.sql_bands), r.vec_id
-        assert r.arrow_nrm == r.sql_nrm, r.vec_id
+    got = {r.vec_id: (list(r.bands), r.nrm) for r in (
+        spark.createDataFrame(data, "vec_id long, qv array<bigint>")
+        .select("vec_id", bn.getField("bands").alias("bands"),
+                bn.getField("nrm").alias("nrm")).collect())}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE e (vec_id BIGINT, qv BIGINT[])")
+    con.executemany("INSERT INTO e VALUES (?, ?)", data)
+    want = {i: (list(b), n) for i, b, n in con.execute(
+        f"SELECT vec_id, {_bands_array_d('qv', ppb)}, "
+        f"(SELECT {NORM_D} FROM (SELECT qv AS q) x) FROM e").fetchall()}
+    assert len(want) == len(data)
+    assert got == want
 
 
 def test_emb_dot_udf_matches_sql_expr(spark):
@@ -237,46 +252,68 @@ def test_emb_dot_udf_matches_sql_expr(spark):
                "CAST(pmod(xxhash64(id + 7, i), 991) - 495 AS BIGINT))")
         .alias("qb")))
     rows = (df.select(emb_dot_udf()(F.col("qa"), F.col("qb"))
-                      .alias("arrow_dot"),
+                      .alias("udf_dot"),
                       F.expr(DOT_S).alias("sql_dot")).collect())
     assert rows
     for r in rows:
-        assert r.arrow_dot == r.sql_dot
+        assert r.udf_dot == r.sql_dot
 
 
-def test_kmeans_assign_udf_matches_lit_on_integer_centroids(spark):
-    """Arrow argmax vs the literal-expression argmax against INTEGER
-    seed centroids — the bit-identical round (all products < 2^53, any
-    summation order exact; see kmeans_assign_udf).  Includes an exact
-    duplicate of a centroid (cosine-1 tie across scaled copies) to
-    exercise the lowest-cell tie-break both ways."""
-    from pyspark.sql import functions as F
-
-    from pdf_extractor_spark.corpus import (EMB_DIM, _assign_cell_lit,
-                                            _cents_rows,
+def test_kmeans_assign_udf_matches_oracle_on_integer_centroids(spark):
+    """Arrow argmax vs the DuckDB assignment (`_kmeans_sql_assign`)
+    against INTEGER centroids — the exact regime of every Lloyd round
+    (floored-mean centroids; all products < 2^53, any summation order
+    exact; see kmeans_assign_udf).  Includes a 2x-scaled copy of a
+    centroid (exactly tied cosine with cell 0 for every row) to exercise
+    the lowest-cell tie-break both ways."""
+    from pdf_extractor_spark.corpus import (_cents_rows, _kmeans_sql_assign,
                                             kmeans_assign_udf)
-    data = (spark.range(400).select(
-        F.col("id").alias("vec_id"),
-        F.expr(f"transform(sequence(0, {EMB_DIM - 1}), i -> "
-               "CAST(pmod(xxhash64(id, i), 41) - 20 AS BIGINT))")
-        .alias("qv")))
-    # centroids: 7 hash-derived + one 2x-scaled copy of centroid 0
-    # (same direction => exactly tied cosine with cell 0 for every row)
-    cents = (spark.range(7).select(
-        F.col("id").alias("cell"),
-        F.expr(f"transform(sequence(0, {EMB_DIM - 1}), i -> "
-               "CAST(CAST(pmod(xxhash64(id + 100, i), 41) - 20 AS BIGINT) "
-               "AS DOUBLE))").alias("cv"))
-        .unionByName(spark.range(1).select(
-            (F.col("id") + 7).alias("cell"),
-            F.expr(f"transform(sequence(0, {EMB_DIM - 1}), i -> "
-                   "2.0 * CAST(CAST(pmod(xxhash64(id + 100, i), 41) - 20 "
-                   "AS BIGINT) AS DOUBLE))").alias("cv"))))
-    rows = _cents_rows(cents)
-    got = (data.select(
-        "vec_id",
-        kmeans_assign_udf(rows)(F.col("qv")).alias("arrow_cell"),
-        _assign_cell_lit(rows).alias("sql_cell")).collect())
-    assert got
-    for r in got:
-        assert r.arrow_cell == r.sql_cell, r.vec_id
+    data = list(enumerate(_int_vectors(400, 1, -20, 20)))
+    base = _int_vectors(7, 2, -20, 20)
+    cents = [(c, [float(x) for x in cv])
+             for c, cv in enumerate(base + [[2 * x for x in base[0]]])]
+    rows = _cents_rows(
+        spark.createDataFrame(cents, "cell long, cv array<double>"))
+    got = {r.vec_id: r.cell for r in (
+        spark.createDataFrame(data, "vec_id long, qv array<bigint>")
+        .select("vec_id", kmeans_assign_udf(rows)(F.col("qv")).alias("cell"))
+        .collect())}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE data (vec_id BIGINT, qv BIGINT[])")
+    con.executemany("INSERT INTO data VALUES (?, ?)", data)
+    con.execute("CREATE TABLE cent0 (cell BIGINT, cv DOUBLE[])")
+    con.executemany("INSERT INTO cent0 VALUES (?, ?)", cents)
+    want = dict(con.execute(
+        f"WITH {_kmeans_sql_assign(0)} SELECT vec_id, cell FROM assign0")
+        .fetchall())
+    assert len(want) == len(data)
+    assert got == want
+    assert 0 in got.values() and 7 not in got.values()  # ties go to cell 0
+
+
+def test_lloyd_arrow_centroids_match_oracle(spark):
+    """One Arrow Lloyd round vs the DuckDB `_kmeans_sql_iter`: both define
+    the centroid as the floored mean of the quantized vectors, so the
+    learned centroids — and the final assignment — agree exactly."""
+    from pdf_extractor_spark.corpus import (_kmeans_sql_assign,
+                                            _kmeans_sql_iter, _lloyd_arrow)
+    data = list(enumerate(_int_vectors(400, 3, -500, 500)))
+    seeds = [(c, [float(x) for x in qv]) for c, qv in data[:8]]
+    df = spark.createDataFrame(data, "vec_id long, qv array<bigint>")
+    cents, assign = _lloyd_arrow(
+        spark, df, spark.createDataFrame(seeds, "cell long, cv array<double>"),
+        rounds=1)
+    got = {r.cell: list(r.cv) for r in cents.collect()}
+    got_assign = {r.vec_id: r.cell for r in assign.collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE data (vec_id BIGINT, qv BIGINT[])")
+    con.executemany("INSERT INTO data VALUES (?, ?)", data)
+    con.execute("CREATE TABLE cent0 (cell BIGINT, cv DOUBLE[])")
+    con.executemany("INSERT INTO cent0 VALUES (?, ?)", seeds)
+    sql = f"WITH {_kmeans_sql_iter(0)}, {_kmeans_sql_assign(1)} "
+    want = dict(con.execute(sql + "SELECT cell, cv FROM cent1").fetchall())
+    want_assign = dict(con.execute(
+        sql + "SELECT vec_id, cell FROM assign1").fetchall())
+    assert all(x == int(x) for cv in got.values() for x in cv)
+    assert got == want
+    assert got_assign == want_assign
