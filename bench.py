@@ -1,8 +1,8 @@
 """Benchmark harness: run every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
-JSON line::
+compact JSON line on stdout::
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric":"...","value":N,"unit":"sec","queries":{...},"sf":...}
 
 ``value`` is the suite wall seconds (sum of per-query medians);
 ``extract_docs_per_sec`` reports the flagship extraction throughput
@@ -12,10 +12,12 @@ prune the computed columns away).
 
 Noise protocol (VERDICT r4 item 4): the whole suite runs ``--repeat``
 INTERLEAVED rounds (round-robin over queries, the same matched-window
-discipline as bench/scaling.py) and each query reports its MEDIAN, plus a
-per-query ``[min, max]`` band under ``queries_band`` — a cross-round delta
-inside the band is host noise, not a regression; r4 lost a round of perf
-signal to exactly that (flagship −15 % with zero code change behind it).
+discipline as bench/scaling.py) and each query reports its MEDIAN.  The
+per-query ``[min, max]`` bands go to stderr as their own JSON line
+(``{"queries_band": {...}}``) — a cross-round delta inside the band is
+host noise, not a regression.  The stdout line carries medians only and
+is checked under ``MAX_LINE`` characters, so a reader that keeps only
+the last 2000 characters of output still gets the whole record.
 
 Usage: python bench.py [--sf-dir DIR] [--master local[N]] [--queries a,b,c]
 """
@@ -30,8 +32,44 @@ import sys
 import time
 
 
+MAX_LINE = 1800   # stdout record budget, under a 2000-char output tail
+
+
 def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def build_record(timings: dict, *, reps: int, wall_all: float, sf_dir: str,
+                 n_docs: int, master: str) -> dict:
+    """The stdout record from per-query median seconds ``timings``."""
+    extract_s = timings.get("extract_pipeline")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    return {
+        "metric": "suite wall seconds over all registered queries "
+                  "(extraction + relational + dedup/ANN/text corpus ops); "
+                  "per-query median over interleaved rounds",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "reps": reps,
+        "wall_s_all_reps": wall_all,
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "n_queries": len(timings),
+        "docs": n_docs,
+        "extract_docs_per_sec": (round(n_docs / extract_s, 1)
+                                 if extract_s else None),
+        "master": master,
+    }
+
+
+def record_line(record: dict) -> str:
+    """``record`` as one compact JSON line; raises if it is not under
+    MAX_LINE characters."""
+    line = json.dumps(record, separators=(",", ":"))
+    if len(line) >= MAX_LINE:
+        raise ValueError(f"bench record is {len(line)} chars, "
+                         f"limit {MAX_LINE}")
+    return line
 
 
 def main(argv=None) -> int:
@@ -78,28 +116,13 @@ def main(argv=None) -> int:
     wall_all = round(time.perf_counter() - t_all, 3)
     timings = {n: round(statistics.median(r), 3) for n, r in reps.items()}
     bands = {n: [round(min(r), 3), round(max(r), 3)] for n, r in reps.items()}
-    total = round(sum(timings.values()), 3)
 
-    extract_s = timings.get("extract_pipeline")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    out = {
-        "metric": "suite wall seconds over all registered queries "
-                  "(extraction + relational + dedup/ANN/text corpus ops); "
-                  "per-query median over interleaved rounds",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "queries_band": bands,
-        "reps": max(1, args.repeat),
-        "wall_s_all_reps": wall_all,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "n_queries": len(timings),
-        "docs": n_docs,
-        "extract_docs_per_sec": (round(n_docs / extract_s, 1)
-                                 if extract_s else None),
-        "master": spark.sparkContext.master,
-    }
-    print(json.dumps(out))
+    # leading newline: progress bars leave stderr mid-line
+    print("\n" + json.dumps({"queries_band": bands}, separators=(",", ":")),
+          file=sys.stderr)
+    print(record_line(build_record(
+        timings, reps=max(1, args.repeat), wall_all=wall_all, sf_dir=sf_dir,
+        n_docs=n_docs, master=spark.sparkContext.master)))
     spark.stop()
     return 0
 

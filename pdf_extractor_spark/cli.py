@@ -153,13 +153,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--target-cell-size", type=int, default=1024,
                     help="SemDeDup expected vectors per k-means cell "
                          "(drives the derived K; default 1024)")
-    ap.add_argument("--skew-safe", action="store_true",
-                    help="count blocking-key occupancy with a map-side-"
-                         "combining aggregate + broadcast anti-join instead "
-                         "of the single-exchange window form: ~1.4x slower "
-                         "when no block is hot, but no task ever ingests a "
-                         "whole pathological block (use when the corpus has "
-                         "multi-million-row duplicate regions)")
     ap.add_argument("--cc-iterations", type=int, default=20,
                     help="max min-label propagation rounds for the dedup "
                          "component labeling; the run iterates to fixpoint "
@@ -210,7 +203,7 @@ def main(argv: list[str] | None = None) -> int:
         metrics = dedup_embeddings_run(
             spark, args.dedup_embeddings, args.output,
             threshold_pct=args.threshold_pct,
-            iterations=args.cc_iterations, skew_safe=args.skew_safe)
+            iterations=args.cc_iterations)
         print(json.dumps(metrics))
         return 0
 
@@ -218,8 +211,7 @@ def main(argv: list[str] | None = None) -> int:
         from .corpus import dedup_texts_run
         metrics = dedup_texts_run(spark, args.dedup_texts, args.output,
                                   hamming_max=args.hamming_max,
-                                  iterations=args.cc_iterations,
-                                  skew_safe=args.skew_safe)
+                                  iterations=args.cc_iterations)
         print(json.dumps(metrics))
         return 0
 
@@ -229,8 +221,7 @@ def main(argv: list[str] | None = None) -> int:
             spark, args.dedup_semantic, args.output,
             threshold_pct=args.threshold_pct,
             iterations=args.cc_iterations,
-            target_cell_size=args.target_cell_size,
-            skew_safe=args.skew_safe)
+            target_cell_size=args.target_cell_size)
         print(json.dumps(metrics))
         return 0
 

@@ -109,18 +109,6 @@ def _persist(df, fresh: bool = True):
     return df
 
 
-def _materialize(df):
-    """Force a persisted iteration state NOW and cut the logical lineage.
-
-    Iterative plans (label propagation, k-means) reference iteration i's
-    result 2× in iteration i+1; without an eager cut the plan tree — and
-    the work — doubles per round.  Persist + count is the standard Pregel
-    move; at scale this is exactly where a production job would also
-    checkpoint for fault-tolerance."""
-    df.count()
-    return df
-
-
 # Few-hash minhash: hash each shingle TWICE (md5(x) ++ md5('#'+x) = 64 hex
 # chars), then treat the 8 disjoint 8-hex-char slices as 8 independent
 # 32-bit hash lanes and min each lane.  4x fewer digest computations than
@@ -337,26 +325,6 @@ def dedup_minhash_lsh(spark, sf_dir):
 # D3. SimHash near-dup (16-bit signature, hamming distance on engineered pairs)
 # ---------------------------------------------------------------------------
 
-def _simhash_expr_d(nbits: int = 16) -> str:
-    """``nbits``-bit simhash over a column `hs` = array of per-word md5 hex
-    strings (md5 has 32 hex digits, so nbits <= 32).  DuckDB dialect only
-    (one vectorized list pass per bit is fine in the oracle; the Spark
-    side is the single-pass _simhash_from_text_s).
-
-    Bit j votes +1/-1 on the parity of hex digit j of each word hash;
-    bit set iff the vote sum is strictly positive.
-    """
-    terms = []
-    for j in range(nbits):
-        digit = f"substr(h, {j + 1}, 1)"
-        nib = f"(strpos('0123456789abcdef', {digit}) - 1)"
-        vote = (f"CAST(list_sum(list_transform(hs, h -> "
-                f"CASE WHEN {nib} % 2 = 1 THEN 1 ELSE -1 END)) AS INT)")
-        terms.append(f"(CASE WHEN {vote} > 0 THEN CAST({1 << j} AS BIGINT) "
-                     f"ELSE 0 END)")
-    return "CAST((" + " + ".join(terms) + ") AS BIGINT)"
-
-
 def _simhash_nib_expr_d(nbits: int = 60, lo: int = 0) -> str:
     """DuckDB dialect of the WIDE simhash: bit j votes on bit (j mod 4) of
     hex digit (j div 4) of each word digest in `hs`, so one md5 yields up
@@ -472,32 +440,12 @@ def simhash_bands_udf(bits: int):
     return F.pandas_udf(_batch, ArrayType(LongType()))
 
 
-def _simhash_from_text_s(nbits: int = 16) -> str:
-    """Spark-side simhash straight from `text`, ONE pass over the word
-    digests: aggregate folds every md5 into an nbits-wide vote vector
-    (zip_with adds the ±1 parity votes of all bits at once), then the
-    vote vector folds into the signature.  The naive per-bit form is
-    nbits separate aggregates over `hs`, and Catalyst additionally
-    inlines the md5 transform into each (see let1) — measured 6×
-    slower at sf0.1 and O(nbits·n) per row at scale instead of O(n)."""
-    votes = (f"aggregate(hs, transform(sequence(1, {nbits}), j -> 0), "
-             f"(acc, h) -> zip_with(acc, transform(sequence(1, {nbits}), "
-             "j -> CASE WHEN (instr('0123456789abcdef', substr(h, j, 1)) - 1) % 2 = 1 "
-             "THEN 1 ELSE -1 END), (x, y) -> x + y))")
-    bits = (f"cast(aggregate(sequence(0, {nbits - 1}), cast(0 as bigint), "
-            "(a, j) -> a + (CASE WHEN vt[j] > 0 "
-            "THEN shiftleft(cast(1 as bigint), j) ELSE cast(0 as bigint) END)) "
-            "as bigint)")
-    return let1(f"transform({WORDS_S}, w -> md5(w))", "hs",
-                let1(votes, "vt", bits))
-
-
 @register(
     "dedup_simhash",
     sql=f"""
     WITH {NEARDUP_CORPUS_D},
     sigs AS (
-      SELECT doc_id, {_simhash_expr_d()} AS simhash
+      SELECT doc_id, {_simhash_nib_expr_d(16)} AS simhash
       FROM (SELECT doc_id, list_transform({WORDS_D}, w -> md5(w)) AS hs
             FROM corpus)
       WHERE len(hs) >= 1)
@@ -507,14 +455,20 @@ def _simhash_from_text_s(nbits: int = 16) -> str:
            bit_count(xor(o.simhash, c.simhash)) <= 3 AS is_near
     FROM sigs o JOIN sigs c ON c.doc_id = o.doc_id + 2000000
     """,
-    doc="SimHash (16-bit, hex-digit-parity votes over word md5s) + hamming "
-        "distance on engineered original/truncated pairs; near iff <= 3 bits",
+    doc="SimHash (16-bit, the production nibble rule: bit j votes on bit "
+        "j%%4 of word-md5 hex digit j//4; the Arrow simhash_bands_udf(4) "
+        "reassembled) + hamming distance on engineered original/truncated "
+        "pairs; near iff <= 3 bits",
 )
 def dedup_simhash(spark, sf_dir):
     corpus = _neardup_corpus_s(spark, sf_dir)
+    bands = simhash_bands_udf(4)(F.col("text"))   # 4 bands x 4 bits
     sigs = (
         corpus.filter(F.expr(f"size({WORDS_S}) >= 1"))
-        .select("doc_id", F.expr(_simhash_from_text_s()).alias("simhash"))
+        .select("doc_id", bands.alias("b"))
+        .select("doc_id", (F.col("b")[0] + F.shiftleft(F.col("b")[1], 4)
+                           + F.shiftleft(F.col("b")[2], 8)
+                           + F.shiftleft(F.col("b")[3], 12)).alias("simhash"))
     )
     sigs = _persist(sigs)   # referenced 2×: both legs of the pair join
     o, c = sigs.alias("o"), sigs.alias("c")
@@ -731,9 +685,8 @@ edges AS (
   SELECT doc_id + 2000000 AS src, doc_id AS dst FROM documents WHERE doc_id % 7 = 0
   UNION ALL
   -- chain ODD multiples of 21 to the previous multiple's copy: components
-  -- become 4-node paths (0 - copy0 - 21 - copy21), diameter 3, so the 3
-  -- unrolled propagation iterations provably reach the fixpoint while
-  -- still having to genuinely iterate (even multiples don't chain on,
+  -- become 4-node paths (0 - copy0 - 21 - copy21), diameter 3, so the
+  -- propagation has to genuinely iterate (even multiples don't chain on,
   -- which caps the path length)
   SELECT doc_id AS src, doc_id - 21 + 2000000 AS dst
   FROM documents WHERE doc_id % 42 = 21
@@ -756,15 +709,16 @@ def _edges_s(spark, sf_dir):
                                         F.col("src").alias("dst")))
 
 
-def _components_sql_iter(it: int) -> str:
-    return f"""
-    lab{it + 1} AS (
-      SELECT n.node,
-             least(MIN(n.label), COALESCE(MIN(l.label), MIN(n.label))) AS label
-      FROM lab{it} n
-      LEFT JOIN edges a ON a.src = n.node
-      LEFT JOIN lab{it} l ON l.node = a.dst
-      GROUP BY n.node)"""
+# DuckDB oracle of the component labels over an `edges` CTE holding both
+# directions of every pair: reachability to its fixpoint (UNION keeps
+# `reach` a set, so the recursion stops), then each node's minimum
+# reaching label.  Needs `WITH RECURSIVE`; exact at any chain length.
+COMPONENTS_D = """
+    reach(node, label) AS (
+      SELECT src, src FROM edges
+      UNION
+      SELECT e.dst, r.label FROM reach r JOIN edges e ON e.src = r.node),
+    lab AS (SELECT node, MIN(label) AS label FROM reach GROUP BY node)"""
 
 
 def _minlabel_hop(labels, edges):
@@ -781,33 +735,17 @@ def _minlabel_hop(labels, edges):
                                     F.min(F.col("label")))).alias("label")))
 
 
-def _min_label_components(edges, iterations: int = 3):
-    """Min-label propagation over a DIRECTED edge list (src, dst) that
-    must already contain both directions of every pair, with a FIXED
-    unrolled hop count — the registry form, mirroring the static DuckDB
-    oracle's three unrolled CTEs.  ``iterations`` must cover the
-    component diameter; production callers use
-    :func:`min_label_components_fixpoint` instead, which iterates until
-    no label changes and SURFACES convergence.  Returns (node, label);
-    canonical node = component minimum."""
-    edges = _persist(edges)
-    labels = edges.select(F.col("src").alias("node")).distinct() \
-                  .withColumn("label", F.col("node"))
-    for _ in range(iterations):
-        # labels is referenced twice below (self-join on neighbours) —
-        # persist + materialize each round or the plan doubles per round
-        labels = _materialize(_persist(labels, fresh=False))
-        labels = _minlabel_hop(labels, edges)
-    return labels
-
-
-def min_label_components_fixpoint(edges, max_rounds: int = 20):
+def min_label_components_fixpoint(edges, max_rounds: int = 20,
+                                  fresh: bool = False):
     """Min-label propagation TO FIXPOINT with surfaced convergence — the
-    production form (``cli.py --dedup-*``, VERDICT r4 item 1).
+    one component labeler, for the production runs (``cli.py --dedup-*``)
+    and the registry's ``dedup_components``.  ``edges`` (src, dst) must
+    already contain both directions of every pair; ``fresh`` is passed to
+    the edges' `_persist` (True in a registry query's first persist).
 
-    The fixed-hop form silently splits any dup-chain whose component
-    diameter exceeds the hop count (wrong ``is_canonical`` decisions, no
-    error).  Here each round ends with a convergence probe: min-label
+    A fixed hop count would silently split any dup-chain whose component
+    diameter exceeds it (wrong ``is_canonical`` decisions, no error).
+    Here each round ends with a convergence probe: min-label
     propagation only ever DECREASES labels, so the label sum (exact
     decimal(38,0) — no int64 overflow at 10^12 × 10^12-sized ids) is
     strictly monotone and two equal consecutive sums ⟺ zero changed
@@ -831,7 +769,7 @@ def min_label_components_fixpoint(edges, max_rounds: int = 20):
     (0 when converged, computed with one thin node-keyed join only on the
     non-converged bail path).  Callers must surface ``cc_converged`` in
     their metrics (no-silent-caps)."""
-    edges = _persist(edges, fresh=False)
+    edges = _persist(edges, fresh=fresh)
     labels = (edges.select(F.col("src").alias("node")).distinct()
               .withColumn("label", F.col("node"))
               .localCheckpoint(eager=True))
@@ -868,28 +806,27 @@ def min_label_components_fixpoint(edges, max_rounds: int = 20):
 @register(
     "dedup_components",
     sql=f"""
-    WITH {_EDGES_D},
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    lab0 AS (SELECT node, node AS label FROM nodes),
-    {_components_sql_iter(0)},
-    {_components_sql_iter(1)},
-    {_components_sql_iter(2)}
+    WITH RECURSIVE {_EDGES_D},
+    {COMPONENTS_D}
     SELECT node AS doc_id, label AS component,
            label = node AS is_canonical
-    FROM lab3
+    FROM lab
     """,
     doc="near-dup canonicalization: connected components over the dedup pair "
-        "list via min-label propagation (3 unrolled iterations of "
+        "list via min-label propagation to fixpoint (rounds of "
         "join-neighbors + groupBy-min — the relational core of "
-        "large-star/small-star).  Each iteration is one equi-join + one "
+        "large-star/small-star — each cut by a local checkpoint, until the "
+        "label sum stops falling).  Each round is one equi-join + one "
         "combine-friendly aggregate, so a round costs the same as any "
-        "shuffle; iteration count grows with component diameter (log n "
+        "shuffle; round count grows with component diameter (log n "
         "with star-contraction), not corpus size.  Canonical doc = min id "
-        "of its component.  Fixture edges include 3-node chains so "
-        "propagation genuinely iterates; a pytest asserts the fixpoint",
+        "of its component.  The oracle is a recursive reachability CTE, "
+        "exact at any diameter",
 )
 def dedup_components(spark, sf_dir):
-    labels = _min_label_components(_edges_s(spark, sf_dir))
+    # fresh: the edges are the query's first persist
+    labels, _cc = min_label_components_fixpoint(_edges_s(spark, sf_dir),
+                                                fresh=True)
     return labels.select(F.col("node").alias("doc_id"),
                          F.col("label").alias("component"),
                          (F.col("label") == F.col("node")).alias("is_canonical"))
@@ -898,13 +835,9 @@ def dedup_components(spark, sf_dir):
 @register(
     "dedup_apply",
     sql=f"""
-    WITH {_EDGES_D},
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    lab0 AS (SELECT node, node AS label FROM nodes),
-    {_components_sql_iter(0)},
-    {_components_sql_iter(1)},
-    {_components_sql_iter(2)},
-    noncanon AS (SELECT node FROM lab3 WHERE label <> node),
+    WITH RECURSIVE {_EDGES_D},
+    {COMPONENTS_D},
+    noncanon AS (SELECT node FROM lab WHERE label <> node),
     corpus AS (
       SELECT doc_id FROM documents
       UNION ALL
@@ -1020,8 +953,8 @@ def pack_sequences(spark, sf_dir):
 QUANT_S = "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT))"
 QUANT_D = "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT))"
 
-# exact int64 dot product of two quantized vectors qa, qb
-DOT_S = "aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
+# exact int64 dot product of two quantized vectors qa, qb (the Spark side
+# is the Arrow-batched `emb_dot_udf`)
 DOT_D = ("CAST(list_sum(list_transform(range(1, len(qa) + 1), "
          "i -> qa[i] * qb[i])) AS BIGINT)")
 NORM_D = ("CAST(list_sum(list_transform(range(1, len(q) + 1), "
@@ -1061,19 +994,11 @@ COS = "CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE)
 def ann_topk_cosine(spark, sf_dir):
     e = t(spark, sf_dir, "embeddings")
     q = (e.filter(F.col("vec_id") < 3)
-         .select(F.col("vec_id").alias("query_id"), F.expr(QUANT_S).alias("qa"))
-         .withColumn("na", F.expr(
-             "aggregate(zip_with(qa, qa, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")))
+         .select(F.col("vec_id").alias("query_id"), F.expr(QUANT_S).alias("qa")))
     c = (e.filter(F.col("vec_id") >= 3)
-         .select("vec_id", F.expr(QUANT_S).alias("qb"))
-         .withColumn("nb", F.expr(
-             "aggregate(zip_with(qb, qb, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .withColumn("dot", F.expr(DOT_S))
-        .withColumn("cos_sim", F.expr(COS))
-        .select("query_id", "vec_id", "cos_sim")
-    )
+         .select("vec_id", F.expr(QUANT_S).alias("qb")))
+    scored = (_query_cos(c.crossJoin(F.broadcast(q)))
+              .select("query_id", "vec_id", "cos_sim"))
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= 5)
@@ -1123,56 +1048,35 @@ def emb_lsh_geometry(n_est: int, target_occupancy: int = 64,
     return max(min_ppb, need)
 
 
-def _occupancy_capped(df, keys: list, cap: int = EMB_BUCKET_CAP,
-                      skew_safe: bool = False):
+def _occupancy_capped(df, keys: list, cap: int = EMB_BUCKET_CAP):
     """Split ``df`` into (kept, dropped_report) by blocking-key occupancy.
     dropped_report = (*keys, bsz) for blocks over the cap — BOUNDED small
     by construction (only pathological blocks exceed 4096).  Guards every
     intra-block self-join in this module (LSH buckets, k-means cells)
     against a degenerate data region going quadratic.
 
-    Default SINGLE-EXCHANGE form: one shuffle by the blocking keys,
-    occupancy counted with a window over that same partitioning, split
-    persisted — so the downstream intra-block self-join (and the drop
-    report) reuse the exchange instead of re-shuffling.  Measured
-    interleaved at sf0.1 (bench/emb_cosine_probe.py): uncapped self-join
-    2.21 s, aggregate+anti-join form 3.82 s, this form 2.63 s.
-
-    ``skew_safe=True`` (VERDICT r4 item 5, the production escape hatch):
-    the window form buffers each block's rows in ONE WindowExec task
-    before the over-cap filter runs — the multi-million-row pathological
-    block the cap exists for is exactly the one that concentrates in a
-    single straggler.  The skew-safe form counts with a hash aggregate
-    instead: partial counts combine MAP-SIDE before the exchange, so no
-    task ever ingests a whole hot key (per-key reducer input = one thin
-    partial row per map task), the over-cap key set is tiny by
-    construction, and the kept split is a broadcast anti-join against it.
-    Costs one extra job over the exploded rows (~1.4× in-suite at sf0.1,
-    where no block is hot), which is why it is a flag and not the
-    default; at the 10⁸-duplicate design point it is the only form whose
-    max task input is bounded."""
-    if skew_safe:
-        df = _persist(df, fresh=False)
-        dropped = (df.groupBy(*keys).agg(F.count("*").alias("bsz"))
-                   .filter(F.col("bsz") > cap))
-        dropped = _persist(dropped, fresh=False)
-        kept = df.join(F.broadcast(dropped.select(*keys)), keys, "left_anti")
-        return kept, dropped
-    sized = df.withColumn("bsz", F.count("*").over(W.partitionBy(*keys)))
-    sized = _persist(sized, fresh=False)
-    kept = sized.filter(F.col("bsz") <= cap).drop("bsz")
-    dropped = (sized.filter(F.col("bsz") > cap)
-               .groupBy(*keys).agg(F.max("bsz").alias("bsz")))
+    Occupancy is counted with a hash aggregate: partial counts combine
+    MAP-SIDE before the exchange, so no task ever ingests a whole hot
+    key (per-key reducer input = one thin partial row per map task), the
+    over-cap key set is tiny by construction, and the kept split is a
+    broadcast anti-join against it.  A window count over the blocking
+    keys would save that one job but buffer each block's rows in ONE
+    task — the multi-million-row block the cap exists for would become a
+    single straggler."""
+    df = _persist(df, fresh=False)
+    dropped = (df.groupBy(*keys).agg(F.count("*").alias("bsz"))
+               .filter(F.col("bsz") > cap))
+    dropped = _persist(dropped, fresh=False)
+    kept = df.join(F.broadcast(dropped.select(*keys)), keys, "left_anti")
     return kept, dropped
 
 
-def _bucket_capped(ex, cap: int = EMB_BUCKET_CAP, skew_safe: bool = False):
+def _bucket_capped(ex, cap: int = EMB_BUCKET_CAP):
     """(kept, dropped) over exploded band rows (vec_id, band_idx, bucket)."""
-    return _occupancy_capped(ex, ["band_idx", "bucket"], cap, skew_safe)
+    return _occupancy_capped(ex, ["band_idx", "bucket"], cap)
 
 
-def emb_band_candidates(b, cap: int = EMB_BUCKET_CAP,
-                        skew_safe: bool = False):
+def emb_band_candidates(b, cap: int = EMB_BUCKET_CAP):
     """Candidate near-dup pairs from banded sign-LSH rows ``b`` =
     (vec_id, bands, ...), hot-bucket capped.  Returns (cand, dropped):
     cand = distinct (vec_a < vec_b) pairs agreeing on any surviving band
@@ -1180,7 +1084,7 @@ def emb_band_candidates(b, cap: int = EMB_BUCKET_CAP,
     cells (no-silent-caps: the caller surfaces it — empty at every sf
     fixture, so registry oracles are unaffected)."""
     ex = b.select("vec_id", F.posexplode("bands").alias("band_idx", "bucket"))
-    kept, dropped = _bucket_capped(ex, cap, skew_safe)
+    kept, dropped = _bucket_capped(ex, cap)
     a, y = kept.alias("a"), kept.alias("y")
     cand = (
         a.join(y, (F.col("a.band_idx") == F.col("y.band_idx"))
@@ -1306,8 +1210,9 @@ def emb_bands_nrm_udf(ppb: int):
 def emb_dot_udf():
     """Exact candidate-verify dot as an Arrow-batched projection — the
     per-candidate dot is the hot expression of the embedding dedup
-    verify (candidates ~ 100x rows at the derived occupancy), and the
-    `DOT_S` fold would run interpreted.  int64 in, int64 out, exact."""
+    verify (candidates ~ 100x rows at the derived occupancy), and an
+    `aggregate(zip_with(...))` fold would run interpreted.  Also the
+    self-norm (``qa`` = ``qb``).  int64 in, int64 out, exact."""
     import pandas as pd
     from pyspark.sql.types import LongType
 
@@ -1318,6 +1223,18 @@ def emb_dot_udf():
         return pd.Series((a * b).sum(axis=1))
 
     return F.pandas_udf(_batch, LongType())
+
+
+def _query_cos(pairs):
+    """``pairs`` (int64 vectors qa, qb) plus their exact quantized
+    `cos_sim`, for the ANN query scorers: the dot and BOTH self-norms in
+    one `emb_dot_udf` pass, so each vector crosses to Python once per
+    pair (per-side norm passes would each add an Arrow stage)."""
+    dot = emb_dot_udf()
+    qa, qb = F.col("qa"), F.col("qb")
+    return (pairs.withColumns({"dot": dot(qa, qb), "na": dot(qa, qa),
+                               "nb": dot(qb, qb)})
+            .withColumn("cos_sim", F.expr(COS)))
 
 
 def _bands_array_d(vec: str, ppb: int) -> str:
@@ -1461,9 +1378,7 @@ def ann_ivf_probe(spark, sf_dir):
             .agg(F.transform(F.array_sort(F.collect_list(F.struct("dim0", "cval"))),
                              lambda s: s["cval"]).alias("cv")))
     q = (e.filter(F.col("vec_id") < 3)
-         .select(F.col("vec_id").alias("query_id"), F.col("qv").alias("qa"))
-         .withColumn("na", F.expr(
-             "aggregate(zip_with(qa, qa, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")))
+         .select(F.col("vec_id").alias("query_id"), F.col("qv").alias("qa")))
     qc = q.crossJoin(F.broadcast(cent))
     cent_cos = F.expr(
         "aggregate(zip_with(qa, cv, (x, y) -> CAST(x AS DOUBLE) * y), "
@@ -1474,17 +1389,10 @@ def ann_ivf_probe(spark, sf_dir):
     probe = (qc.withColumn("ccos", cent_cos)
              .withColumn("rn", F.row_number().over(wp))
              .filter(F.col("rn") <= 2).select("query_id", "label"))
-    cand = (e.filter(F.col("vec_id") >= 3)
-            .withColumnRenamed("qv", "qb")
-            .withColumn("nb", F.expr(
-                "aggregate(zip_with(qb, qb, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")))
-    scored = (
-        cand.join(F.broadcast(probe), "label")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("dot", F.expr(DOT_S))
-        .withColumn("cos_sim", F.expr(COS))
-        .select("query_id", "vec_id", "label", "cos_sim")
-    )
+    cand = e.filter(F.col("vec_id") >= 3).withColumnRenamed("qv", "qb")
+    scored = (_query_cos(cand.join(F.broadcast(probe), "label")
+                         .join(F.broadcast(q), "query_id"))
+              .select("query_id", "vec_id", "label", "cos_sim"))
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= 5)
@@ -1494,14 +1402,14 @@ def ann_ivf_probe(spark, sf_dir):
 # centroid-side cosine helpers for k-means IVF (int vector x double centroid;
 # sequential double sums — same evaluation order both engines, a pattern the
 # existing ann_ivf_probe centroid math already hash-validates cross-engine)
-_CDOT_S = ("aggregate(zip_with(qv, cv, (x, y) -> CAST(x AS DOUBLE) * y), "
-           "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
-_CNRM_S = ("sqrt(aggregate(zip_with(cv, cv, (x, y) -> x * y), "
-           "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))")
-_CDOT_D = ("CAST(list_sum(list_transform(range(1, 65), "
-           "i -> CAST(d.qv[i] AS DOUBLE) * c.cv[i])) AS DOUBLE)")
-_CNRM_D = ("sqrt(CAST(list_sum(list_transform(range(1, 65), "
-           "i -> c.cv[i] * c.cv[i])) AS DOUBLE))")
+_CENT_DOT_S = ("aggregate(zip_with(qv, cv, (x, y) -> CAST(x AS DOUBLE) * y), "
+               "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
+_CENT_NRM_S = ("sqrt(aggregate(zip_with(cv, cv, (x, y) -> x * y), "
+               "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))")
+_CENT_DOT_D = ("CAST(list_sum(list_transform(range(1, 65), "
+               "i -> CAST(d.qv[i] AS DOUBLE) * c.cv[i])) AS DOUBLE)")
+_CENT_NRM_D = ("sqrt(CAST(list_sum(list_transform(range(1, 65), "
+               "i -> c.cv[i] * c.cv[i])) AS DOUBLE))")
 
 K_IVF = 8
 
@@ -1514,7 +1422,7 @@ def _kmeans_sql_assign(it: int) -> str:
       SELECT vec_id, cell FROM (
         SELECT d.vec_id, c.cell,
                ROW_NUMBER() OVER (PARTITION BY d.vec_id
-                 ORDER BY {_CDOT_D} / {_CNRM_D} DESC, c.cell ASC) AS rn
+                 ORDER BY {_CENT_DOT_D} / {_CENT_NRM_D} DESC, c.cell ASC) AS rn
         FROM data d CROSS JOIN cent{it} c) WHERE rn = 1)"""
 
 
@@ -1619,7 +1527,7 @@ def _lloyd_arrow(spark, data, seed_cents, rounds: int):
       SELECT query_id, cell FROM (
         SELECT d.query_id, c.cell,
                ROW_NUMBER() OVER (PARTITION BY d.query_id
-                 ORDER BY {_CDOT_D} / {_CNRM_D} DESC, c.cell ASC) AS rn
+                 ORDER BY {_CENT_DOT_D} / {_CENT_NRM_D} DESC, c.cell ASC) AS rn
         FROM (SELECT query_id, qv FROM q) d CROSS JOIN cent2 c) WHERE rn <= 2),
     scored AS (
       SELECT q.query_id, a.cell, d.vec_id,
@@ -1660,26 +1568,17 @@ def ann_ivf_kmeans(spark, sf_dir):
     # centroids) and stays lazy: its sole consumer is the scorer.
     cents, assign_last = _lloyd_arrow(spark, data, seeds, rounds=2)
     q = (e.filter(F.col("vec_id") < 3)
-         .select(F.col("vec_id").alias("query_id"), F.col("qv").alias("qa"))
-         .withColumn("na", F.expr(
-             "aggregate(zip_with(qa, qa, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")))
+         .select(F.col("vec_id").alias("query_id"), F.col("qv").alias("qa")))
     wp = W.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc("cell"))
     probe = (q.select("query_id", F.col("qa").alias("qv"))
              .crossJoin(F.broadcast(cents))
-             .withColumn("ccos", F.expr(f"{_CDOT_S} / {_CNRM_S}"))
+             .withColumn("ccos", F.expr(f"{_CENT_DOT_S} / {_CENT_NRM_S}"))
              .withColumn("rn", F.row_number().over(wp))
              .filter(F.col("rn") <= 2).select("query_id", "cell"))
-    dot = emb_dot_udf()
-    cand = (assign_last
-            .withColumnRenamed("qv", "qb")
-            .withColumn("nb", dot(F.col("qb"), F.col("qb"))))
-    scored = (
-        cand.join(F.broadcast(probe), "cell")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("dot", dot(F.col("qa"), F.col("qb")))
-        .withColumn("cos_sim", F.expr(COS))
-        .select("query_id", "vec_id", "cell", "cos_sim")
-    )
+    cand = assign_last.withColumnRenamed("qv", "qb")
+    scored = (_query_cos(cand.join(F.broadcast(probe), "cell")
+                         .join(F.broadcast(q), "query_id"))
+              .select("query_id", "vec_id", "cell", "cos_sim"))
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= 5)
@@ -1883,8 +1782,7 @@ def _dedup_decisions(spark, pairs, id_col: str, output_dir: str,
 
 def dedup_embeddings_run(spark, input_path: str, output_dir: str,
                          threshold_pct: int = 98, iterations: int = 20,
-                         cap: int = EMB_BUCKET_CAP,
-                         skew_safe: bool = False) -> dict:
+                         cap: int = EMB_BUCKET_CAP) -> dict:
     """Production embedding near-dup entry point (``cli.py
     --dedup-embeddings``): the derived-geometry seam exercised end to end.
 
@@ -1912,7 +1810,7 @@ def dedup_embeddings_run(spark, input_path: str, output_dir: str,
     # band explode + both verify re-joins
     b = _persist(_with_bands_nrm(_valid_embeddings(spark, input_path), ppb))
     rejected = n_est - b.count()
-    cand, dropped = emb_band_candidates(b, cap, skew_safe)
+    cand, dropped = emb_band_candidates(b, cap)
     pairs = (_scored_pairs(cand, b)
              .filter(F.col("cos_sim") * 100 >= threshold_pct)
              .select("vec_a", "vec_b", "cos_sim"))
@@ -1921,15 +1819,14 @@ def dedup_embeddings_run(spark, input_path: str, output_dir: str,
     return {
         "mode": "dedup_embeddings", "n_est": n_est, "ppb": ppb,
         "bands": N_EMB_BANDS, "bucket_cap": cap, "rejected_rows": rejected,
-        "skew_safe": skew_safe, **out,
+        **out,
         "wall_s": round(time.perf_counter() - t0, 3),
     }
 
 
 def dedup_texts_run(spark, input_path: str, output_dir: str,
                     hamming_max: int = 3, iterations: int = 20,
-                    cap: int = EMB_BUCKET_CAP,
-                    skew_safe: bool = False) -> dict:
+                    cap: int = EMB_BUCKET_CAP) -> dict:
     """Production simhash near-dup entry point (``cli.py --dedup-texts``):
     the `simhash_band_bits` seam exercised end to end over a (doc_id,
     text) parquet.
@@ -1966,22 +1863,20 @@ def dedup_texts_run(spark, input_path: str, output_dir: str,
     sigs = _persist(sigs)   # band explode + both verify legs
     ex = sigs.select(
         "doc_id", F.posexplode("bands").alias("band_idx", "band_bits"))
-    kept, dropped = _occupancy_capped(ex, ["band_idx", "band_bits"],
-                                      cap, skew_safe)
+    kept, dropped = _occupancy_capped(ex, ["band_idx", "band_bits"], cap)
     pairs = _simhash_band_pairs(sigs, kept, hamming_max)
     out = _dedup_decisions(spark, pairs, "doc_id", output_dir, dropped,
                            "bands", iterations)
     return {
         "mode": "dedup_texts", "n_est": n_est, "band_bits": bits,
         "signature_bits": 4 * bits, "hamming_max": hamming_max,
-        "band_cap": cap, "skew_safe": skew_safe, **out,
+        "band_cap": cap, **out,
         "wall_s": round(time.perf_counter() - t0, 3),
     }
 
 
 def semantic_cell_pairs(m, cap: int = EMB_BUCKET_CAP,
-                        threshold: float = 0.98,
-                        skew_safe: bool = False):
+                        threshold: float = 0.98):
     """Intra-cell >=``threshold`` cosine pairing over assigned rows ``m`` =
     (cell, vec_id, qv, nrm), hot-cell capped.  A dense embedding mode —
     boilerplate pages are common in web data — can land millions of
@@ -1990,7 +1885,7 @@ def semantic_cell_pairs(m, cap: int = EMB_BUCKET_CAP,
     RETURNED as (cell, bsz) (the no-silent-caps rule: callers surface the
     report).  Same guard as the sibling LSH path's _bucket_capped.  The
     verify dot is the Arrow-batched exact int64 `emb_dot_udf`."""
-    kept, dropped = _occupancy_capped(m, ["cell"], cap, skew_safe)
+    kept, dropped = _occupancy_capped(m, ["cell"], cap)
     a = kept.select("cell", F.col("vec_id").alias("vec_a"),
                     F.col("qv").alias("qa"), F.col("nrm").alias("na"))
     y = kept.select("cell", F.col("vec_id").alias("vec_b"),
@@ -2006,8 +1901,7 @@ def semantic_cell_pairs(m, cap: int = EMB_BUCKET_CAP,
 def dedup_semantic_run(spark, input_path: str, output_dir: str,
                        threshold_pct: int = 98, lloyd_iters: int = 1,
                        iterations: int = 20, target_cell_size: int = 1024,
-                       cap: int = EMB_BUCKET_CAP,
-                       skew_safe: bool = False) -> dict:
+                       cap: int = EMB_BUCKET_CAP) -> dict:
     """Production SemDeDup entry point (``cli.py --dedup-semantic``,
     VERDICT r4 item 2): the ``kmeans_k`` derivation seam exercised end to
     end over a (vec_id, embedding array<float/double>) parquet.
@@ -2042,8 +1936,7 @@ def dedup_semantic_run(spark, input_path: str, output_dir: str,
              .select(F.col("vec_id").alias("cell"), F.col("qv").alias("cv")))
     _cents, assigned = _lloyd_arrow(spark, data, seeds, lloyd_iters)
     m = assigned.withColumn("nrm", emb_dot_udf()(F.col("qv"), F.col("qv")))
-    pairs, dropped = semantic_cell_pairs(m, cap, threshold_pct / 100.0,
-                                         skew_safe)
+    pairs, dropped = semantic_cell_pairs(m, cap, threshold_pct / 100.0)
     out = _dedup_decisions(spark, pairs.select("vec_a", "vec_b", "cos_sim"),
                            "vec_id", output_dir, dropped, "cells",
                            iterations)
@@ -2053,7 +1946,7 @@ def dedup_semantic_run(spark, input_path: str, output_dir: str,
         "expected_occupancy": (round(n_est / k, 1) if k else None),
         "lloyd_iters": lloyd_iters, "cell_cap": cap,
         "threshold_pct": threshold_pct, "rejected_rows": rejected,
-        "skew_safe": skew_safe, **out,
+        **out,
         "wall_s": round(time.perf_counter() - t0, 3),
     }
 

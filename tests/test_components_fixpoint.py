@@ -1,11 +1,14 @@
-"""Fixpoint component labeling (VERDICT r4 item 1): the production dedup
-CLIs must never silently split a dup-chain whose diameter exceeds the
-propagation budget — they iterate to fixpoint and SURFACE convergence.
+"""Fixpoint component labeling (VERDICT r4 item 1): the dedup CLIs and
+the registry's ``dedup_components`` must never silently split a
+dup-chain whose diameter exceeds the propagation budget — they iterate
+to fixpoint and SURFACE convergence.
 
-The adversarial fixture is a 12-node chain (diameter 11 >> the old fixed
-3 hops): the legacy unrolled form provably splits it; the fixpoint form
-labels it exactly and reports converged."""
+The adversarial fixture is a 12-node chain (diameter 11, far past the
+3 hops a fixed-hop labeler would take): the fixpoint form labels it
+exactly and reports converged, and the recursive DuckDB oracle of the
+registry queries labels it the same way."""
 
+import duckdb
 import pyspark.sql.functions as F
 import pytest
 
@@ -22,13 +25,22 @@ def _chain_edges(spark, n=CHAIN_N, stride=10):
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
 
-def test_fixed_hops_split_long_chain(spark):
-    """The r4 bug, demonstrated: 3 unrolled hops leave a diameter-11
-    chain with >1 distinct label — wrong components, no error."""
-    from pdf_extractor_spark.corpus import _min_label_components
-    labels = _min_label_components(_chain_edges(spark), iterations=3)
-    n_components = labels.select("label").distinct().count()
-    assert n_components > 1
+def test_recursive_oracle_labels_long_chain_exactly(spark):
+    """The registry oracle (`COMPONENTS_D`) gives the fixpoint's labels
+    on the chain, so the oracle itself cannot split long chains."""
+    from pdf_extractor_spark.corpus import (COMPONENTS_D,
+                                            min_label_components_fixpoint)
+    edges = _chain_edges(spark)
+    labels, _cc = min_label_components_fixpoint(edges)
+    want = {r.node: r.label for r in labels.collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE chain (src BIGINT, dst BIGINT)")
+    con.executemany("INSERT INTO chain VALUES (?, ?)",
+                    [(r.src, r.dst) for r in edges.collect()])
+    got = dict(con.execute(
+        f"WITH RECURSIVE edges AS (SELECT * FROM chain), {COMPONENTS_D} "
+        "SELECT node, label FROM lab").fetchall())
+    assert got == want == {i * 10: 0 for i in range(CHAIN_N)}
 
 
 def test_fixpoint_labels_long_chain_exactly(spark):

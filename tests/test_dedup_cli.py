@@ -10,8 +10,8 @@ import pyspark.sql.functions as F
 import pytest
 
 from pdf_extractor_spark.corpus import (
-    COS, DOT_S, PPB_DEDUP, QUANT_S, emb_lsh_geometry, estimate_parquet_rows,
-    simhash_bands_udf)
+    COS, DOT_D, NORM_D, PPB_DEDUP, QUANT_D, emb_lsh_geometry,
+    estimate_parquet_rows, simhash_bands_udf)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -28,8 +28,24 @@ def _with_bad_rows(spark, e):
     return e.unionByName(bad)
 
 
-def _clean(df):
-    return df.filter(~F.col("vec_id").isin(*BAD_IDS))
+def _bruteforce_pairs(inp: str, keep: str) -> set:
+    """All-pairs exact quantized cosine over the clean rows (not BAD_IDS)
+    of the parquet at ``inp``, in DuckDB: (vec_a < vec_b) pairs whose
+    `cos_sim` passes the ``keep`` predicate."""
+    rows = duckdb.connect().execute(f"""
+        WITH q AS (
+          SELECT vec_id, {QUANT_D} AS qv FROM read_parquet('{inp}/*.parquet')
+          WHERE vec_id NOT IN {BAD_IDS}),
+        n AS (SELECT vec_id, qv, (SELECT {NORM_D} FROM (SELECT qv AS q) x) AS nrm
+              FROM q),
+        p AS (
+          SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.qv AS qa,
+                 b.qv AS qb, a.nrm AS na, b.nrm AS nb
+          FROM n a JOIN n b ON a.vec_id < b.vec_id),
+        d AS (SELECT vec_a, vec_b, na, nb, {DOT_D} AS dot FROM p)
+        SELECT vec_a, vec_b FROM (SELECT vec_a, vec_b, {COS} AS cos_sim FROM d)
+        WHERE {keep}""").fetchall()
+    return set(rows)
 
 
 def test_geometry_derived_from_million_row_footer(spark, tmp_path):
@@ -106,21 +122,8 @@ def test_cli_decisions_match_bruteforce(spark, tmp_path, capsys):
     assert metrics["rejected_rows"] == len(BAD_IDS)
 
     # brute-force oracle: all-pairs exact quantized cosine over the clean
-    # rows of the SAME input file and quantization
-    q = (_clean(spark.read.parquet(inp))
-         .select("vec_id", F.expr(QUANT_S).alias("qv"))
-         .withColumn("nrm", F.expr(
-             "aggregate(zip_with(qv, qv, (x, y) -> x * y), "
-             "0L, (acc, v) -> acc + v)")))
-    a = q.select(F.col("vec_id").alias("vec_a"), F.col("qv").alias("qa"),
-                 F.col("nrm").alias("na"))
-    y = q.select(F.col("vec_id").alias("vec_b"), F.col("qv").alias("qb"),
-                 F.col("nrm").alias("nb"))
-    brute = (a.crossJoin(y).filter(F.col("vec_a") < F.col("vec_b"))
-             .withColumn("dot", F.expr(DOT_S))
-             .withColumn("cos_sim", F.expr(COS))
-             .filter(F.col("cos_sim") * 100 >= 98))
-    want_pairs = {(r.vec_a, r.vec_b) for r in brute.collect()}
+    # rows of the SAME input file and quantization, in DuckDB
+    want_pairs = _bruteforce_pairs(inp, "cos_sim * 100 >= 98")
     got_pairs = {(r.vec_a, r.vec_b)
                  for r in spark.read.parquet(f"{out}/pairs").collect()}
     assert want_pairs, "fixture must contain engineered near-dup pairs"
@@ -308,20 +311,7 @@ class TestDedupSemantic:
         assert metrics["cc_converged"] is True
         assert metrics["rejected_rows"] == len(BAD_IDS)
 
-        q = (_clean(spark.read.parquet(inp))
-             .select("vec_id", F.expr(QUANT_S).alias("qv"))
-             .withColumn("nrm", F.expr(
-                 "aggregate(zip_with(qv, qv, (x, y) -> x * y), "
-                 "0L, (acc, v) -> acc + v)")))
-        a = q.select(F.col("vec_id").alias("vec_a"),
-                     F.col("qv").alias("qa"), F.col("nrm").alias("na"))
-        y = q.select(F.col("vec_id").alias("vec_b"),
-                     F.col("qv").alias("qb"), F.col("nrm").alias("nb"))
-        brute = (a.crossJoin(y).filter(F.col("vec_a") < F.col("vec_b"))
-                 .withColumn("dot", F.expr(DOT_S))
-                 .withColumn("cos_sim", F.expr(COS))
-                 .filter(F.col("cos_sim") >= 0.98))
-        want_all = {(r.vec_a, r.vec_b) for r in brute.collect()}
+        want_all = _bruteforce_pairs(inp, "cos_sim >= 0.98")
         planted = {(r.vec_id, r.vec_id + 100000)
                    for r in e.filter(F.col("vec_id") % 4 == 0).collect()}
         got = {(r.vec_a, r.vec_b)

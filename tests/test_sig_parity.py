@@ -241,22 +241,28 @@ def test_emb_bands_nrm_udf_matches_sql_expr(spark, ppb):
 
 
 def test_emb_dot_udf_matches_sql_expr(spark):
+    """The Arrow dot against the DuckDB `DOT_D` over the same vectors."""
     from pyspark.sql import functions as F
 
-    from pdf_extractor_spark.corpus import DOT_S, EMB_DIM, emb_dot_udf
+    from pdf_extractor_spark.corpus import DOT_D, EMB_DIM, emb_dot_udf
     df = (spark.range(80).select(
+        F.col("id"),
         F.expr(f"transform(sequence(0, {EMB_DIM - 1}), i -> "
                "CAST(pmod(xxhash64(id, i), 997) - 498 AS BIGINT))")
         .alias("qa"),
         F.expr(f"transform(sequence(0, {EMB_DIM - 1}), i -> "
                "CAST(pmod(xxhash64(id + 7, i), 991) - 495 AS BIGINT))")
         .alias("qb")))
-    rows = (df.select(emb_dot_udf()(F.col("qa"), F.col("qb"))
-                      .alias("udf_dot"),
-                      F.expr(DOT_S).alias("sql_dot")).collect())
-    assert rows
-    for r in rows:
-        assert r.udf_dot == r.sql_dot
+    rows = (df.select("id", "qa", "qb",
+                      emb_dot_udf()(F.col("qa"), F.col("qb")).alias("dot"))
+            .collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE v (id BIGINT, qa BIGINT[], qb BIGINT[])")
+    con.executemany("INSERT INTO v VALUES (?, ?, ?)",
+                    [(r.id, r.qa, r.qb) for r in rows])
+    want = dict(con.execute(f"SELECT id, {DOT_D} FROM v").fetchall())
+    assert len(want) == 80
+    assert {r.id: r.dot for r in rows} == want
 
 
 def test_kmeans_assign_udf_matches_oracle_on_integer_centroids(spark):

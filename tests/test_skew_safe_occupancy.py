@@ -1,19 +1,14 @@
 """Skew-safe occupancy counting (VERDICT r4 item 5).
 
-The default ``_occupancy_capped`` form counts block occupancy with a
-window over the blocking keys — one exchange, but each block's rows are
-buffered in ONE WindowExec task before the over-cap filter runs, so the
-multi-million-row pathological block the cap exists for is exactly the
-one that concentrates in a single straggler.  The ``skew_safe=True``
-form counts with a map-side-combining hash aggregate instead: no task
-ever ingests a whole hot key (per-key reducer input is one thin partial
-row per map task), and the kept split is a broadcast anti-join against
-the tiny over-cap key set.
+``_occupancy_capped`` counts block occupancy with a map-side-combining
+hash aggregate: no task ever ingests a whole hot key (per-key reducer
+input is one thin partial row per map task), and the kept split is a
+broadcast anti-join against the tiny over-cap key set.
 
 The adversarial fixture here is one 10^5-row hot key beside normal keys;
-asserts: both forms return IDENTICAL splits, the skew-safe counting plan
+asserts: the split is the fixture's known truth, and the counting plan
 has no Window operator and combines partials map-side (partial_count
-below the Exchange), and the production CLI flag reaches the metrics.
+below the Exchange).
 """
 
 import contextlib
@@ -45,15 +40,13 @@ def _plan(df) -> str:
 
 
 def test_skew_safe_split_equals_window_split(spark):
+    """The split is the fixture's truth: every cold row kept, the hot
+    key alone dropped with its full count."""
     from pdf_extractor_spark.corpus import _occupancy_capped
-    df = _fixture(spark)
-    kept_w, drop_w = _occupancy_capped(df, ["k"], CAP)
-    kept_s, drop_s = _occupancy_capped(df, ["k"], CAP, skew_safe=True)
-    assert sorted(r.v for r in kept_s.collect()) == \
-           sorted(r.v for r in kept_w.collect())
-    dw = {(r.k, r.bsz) for r in drop_w.collect()}
-    ds = {(r.k, r.bsz) for r in drop_s.collect()}
-    assert dw == ds == {(0, HOT_N)}
+    kept, dropped = _occupancy_capped(_fixture(spark), ["k"], CAP)
+    assert sorted(r.v for r in kept.collect()) == \
+           list(range(HOT_N, HOT_N + 500))
+    assert {(r.k, r.bsz) for r in dropped.collect()} == {(0, HOT_N)}
 
 
 def test_skew_safe_counts_map_side_no_window(spark):
@@ -64,7 +57,7 @@ def test_skew_safe_counts_map_side_no_window(spark):
     operator appears anywhere in either output's plan."""
     from pdf_extractor_spark.corpus import _occupancy_capped
     df = _fixture(spark)
-    kept, dropped = _occupancy_capped(df, ["k"], CAP, skew_safe=True)
+    kept, dropped = _occupancy_capped(df, ["k"], CAP)
     for out in (kept, dropped):
         p = _plan(out)
         assert "Window" not in p
@@ -76,28 +69,3 @@ def test_skew_safe_counts_map_side_no_window(spark):
     # never a shuffle of the exploded rows by the skewed key
     pk = _plan(kept)
     assert "BroadcastHashJoin" in pk and "LeftAnti" in pk
-
-
-def test_window_form_does_use_window(spark):
-    """The default form's trade (reused exchange, windowed count) is the
-    documented one — pin it so a silent form-swap shows up here."""
-    from pdf_extractor_spark.corpus import _occupancy_capped
-    kept, _ = _occupancy_capped(_fixture(spark), ["k"], CAP)
-    assert "Window" in _plan(kept)
-
-
-def test_cli_flag_reaches_metrics(spark, tmp_path, capsys):
-    import json
-
-    from pdf_extractor_spark.cli import main
-    p = str(tmp_path / "emb")
-    (spark.range(64).select(
-        F.col("id").alias("vec_id"),
-        F.expr("transform(sequence(1, 64), i -> CAST(0.01 * i AS FLOAT))")
-        .alias("embedding"))
-     .write.parquet(p))
-    rc = main(["--dedup-embeddings", p, "--output",
-               str(tmp_path / "out"), "--skew-safe"])
-    assert rc == 0
-    metrics = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert metrics["skew_safe"] is True
